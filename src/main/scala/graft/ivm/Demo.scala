@@ -67,7 +67,7 @@ object Demo {
       .collect().headOption.foreach(r => require(r.getDouble(0) == 11.0))
     println("CREATE IMMV surface OK")
 
-    // ---- 2. Materialize + incremental refresh (the missing half)
+    // ---- 2. Create + incremental refresh (the missing half)
     val store = new MemStore
     val base: String => DataFrame = {
       case "lineitem" => lineitem

@@ -28,10 +28,6 @@ object Eval {
       val (le, re) = (eval(l, resolve, hook), eval(r, resolve, hook))
       if (keys.isEmpty) le.crossJoin(re) else le.join(re, keys)
     case Union(l, r) => eval(l, resolve, hook).unionByName(eval(r, resolve, hook))
-    // semantically transparent: materialization changes state layout, not
-    // results — from-base evaluation is just the child (create's hook
-    // serves the already-written multiset state instead, expanded)
-    case Materialize(c) => eval(c, resolve, hook)
     case TopK(c, sort, n) =>
       eval(c, resolve, hook).orderBy(sortCols(sort): _*).limit(n)
     case WindowDeco(c, cols) => eval(c, resolve, hook).select(cols: _*)

@@ -60,17 +60,21 @@ object Ivm {
     })
   private def parallelParts: Boolean =
     !sys.props.get("graft.parallelWalk").contains("false")
+  /** Run `thunks` on the parts pool. Every part is awaited before the
+    * first failure (in submission order) is rethrown un-wrapped: a part
+    * still running after its caller's transaction closed would publish
+    * its writes outside it. */
   private def inPartsPool[A](thunks: Seq[() => A]): Seq[A] = {
     val fs = thunks.map(th => partsPool.submit(new java.util.concurrent.Callable[A] {
       override def call(): A = th()
     }))
-    fs.map { f =>
-      try f.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw (if (e.getCause != null) e.getCause else e)
-      }
+    val rs = fs.map(f => Try(f.get()))
+    rs.collectFirst { case scala.util.Failure(e) => e }.foreach {
+      case e: java.util.concurrent.ExecutionException if e.getCause != null =>
+        throw e.getCause
+      case e => throw e
     }
+    rs.map(_.get)
   }
 
   // ------------------------------------------------------------ catalog
@@ -148,7 +152,7 @@ object Ivm {
   private def stateName(view: String, path: String) = s"$view/$path"
   private val TOP = "top"
 
-  /** Materialize the view: every interior Aggregate state (bottom-up) plus
+  /** Create the view: every interior Aggregate state (bottom-up) plus
     * the view's own rows. For a view whose top is an Aggregate the top
     * state doubles as the view (with hidden bookkeeping columns stripped on
     * read); otherwise the view rows are stored as a weighted multiset. */
@@ -194,9 +198,8 @@ object Ivm {
         case ScalarDeco(c, subs, _) =>
           // the child and each 1-row scalar subview maintain independently;
           // subviews live under <view>/q<i> (their own little view trees).
-          // Parts are independent trees — create them concurrently (their
-          // puts stage into THIS thread's open transaction, the same
-          // cross-thread staging the level seeds below already rely on).
+          // Parts are independent trees — create them concurrently where
+          // the store allows it, as refresh does (see partsPool).
           def subCreate(s: IvmQuery, i: Int): Unit = {
             createStates(s, base, store,
               canonNamer(s, subViewName(view, i)),
@@ -209,7 +212,7 @@ object Ivm {
             createStates(c, base, store, canonNamer(c, view),
               topName = stateName(view, TOP), skipExisting = false,
               insertOnly = insertOnly)
-          if (parallelParts && subs.nonEmpty)
+          if (store.concurrentParts && parallelParts && subs.nonEmpty)
             inPartsPool[Unit](
               subs.zipWithIndex.map { case (s, i) => () => subCreate(s, i) }
                 :+ (() => childCreate()))
@@ -242,7 +245,7 @@ object Ivm {
       case None    => q.tables.toSet
     }
 
-  /** Materialize every interior state of `q` (bottom-up), naming each
+  /** Create every interior state of `q` (bottom-up), naming each
     * stateful node via `nameOf` and declaring its bucketing keys so the
     * store lays it out for bucket-pruned refresh. Seeds at one level are
     * independent → parallel puts; levels still commit bottom-up (a level's
@@ -265,7 +268,6 @@ object Ivm {
     // any aggregate whose state this call (or a previous create in the
     // same shared group) already wrote.
     val served = scala.collection.concurrent.TrieMap.empty[String, (String, Aggregate)]
-    val servedMat = scala.collection.concurrent.TrieMap.empty[String, String]
     val ready = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     def hook0(node: IvmQuery): Option[DataFrame] = node match {
       case a: Aggregate =>
@@ -275,11 +277,6 @@ object Ivm {
             else store(name).select(
               (agg.keys.map(col) ++ agg.aggs.map(Eval.stateOutput)): _*)
           }
-      case mz: Materialize =>
-        // parents of a materialized subview read its just-written multiset
-        // (expanded) instead of re-running the child's base-scan join
-        servedMat.get(mz.toString).filter(ready.contains)
-          .map(name => expandMultiset(store(name), HCOUNT))
       case _ => None
     }
     // Shared-CTE evaluation cache: a stateless subtree referenced from
@@ -305,7 +302,6 @@ object Ivm {
     /** Aggregate-nesting depth: the creation level of each state. */
     def depth(node: IvmQuery): Int = node match {
       case Aggregate(c, _, _)     => 1 + depth(c)
-      case Materialize(c)         => 1 + depth(c)
       case Scan(_)                => 0
       case Filter(c, _)           => depth(c)
       case Project(c, _)          => depth(c)
@@ -357,19 +353,6 @@ object Ivm {
                 () => Eval.evalAuxState(a, spec, base, hook))
               (s"$name.aux.${spec.name}", bKeys, bumpX(2 * depth(a)), mkX)
             }
-        case mz @ Materialize(c) =>
-          // interior multiset state: child rows in Z-set canonical form
-          // (row → count), written one level above the child's own states
-          // so parents' evals above serve from it through the hook
-          val name = nameOf(mz, path)
-          servedMat.putIfAbsent(mz.toString, name)
-          val rows = Eval.eval(c, base, hook) // plan only (columns)
-          val cols = rows.columns.toSeq
-          val (bump, mk) = dedup(s"z:$c", name, () => {
-            val r = Eval.eval(c, base, hook)
-            r.groupBy(cols.map(col): _*).agg(count(lit(1)).as(HCOUNT))
-          })
-          walk(c, path + ".0") ++ Seq((name, cols, bump(2 * depth(mz)), mk))
         case Filter(c, _)  => walk(c, path + ".0")
         case Project(c, _) => walk(c, path + ".0")
         case Join(l, r, _) => walk(l, path + ".0") ++ walk(r, path + ".1")
@@ -404,7 +387,7 @@ object Ivm {
       if (!creating(name)) ready.add(name) }
     states.groupBy(_._3).toSeq.sortBy(_._1).foreach { case (_, level) =>
       inParallel(level) { case (name, keys, _, mk) =>
-        timed(s"seed $name")(store.putKeyed(name, mk(), keys)) }
+        store.putKeyed(name, mk(), keys) }
       level.foreach { case (name, _, _, _) => ready.add(name) }
     }
     q match {
@@ -440,8 +423,6 @@ object Ivm {
     case Aggregate(_, keys, aggs) =>
       store(stateName(view, "r"))
         .select((keys.map(col) ++ aggs.map(Eval.stateOutput)): _*)
-    case _: Materialize => // top-level materialized multiset IS the view
-      expandMultiset(store(stateName(view, "r")), HCOUNT)
     case _ =>
       val st = store(stateName(view, TOP))
       expandMultiset(st, HCOUNT)
@@ -699,14 +680,15 @@ object Ivm {
     * counts if it provably fires during the measured loop). */
   def traceReplays: Long = Trace.replays
 
-  // temporary instrumentation (enable with -Dgraft.timing=true)
-  private[ivm] def timed[A](tag: String)(f: => A): A =
-    if (!sys.props.get("graft.timing").contains("true")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"      [t] $tag ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
+  /** `graft.pinMode`: `lazy` (default) or `reliable` — how the
+    * distributed path pins O(touched) intermediates (see
+    * [[ZDelta.Ctx.pin]]). */
+  private[ivm] def reliablePins: Boolean =
+    sys.props.getOrElse("graft.pinMode", "lazy") match {
+      case "lazy"     => false
+      case "reliable" => true
+      case m => throw new IllegalArgumentException(
+        s"graft.pinMode=$m: expected lazy or reliable")
     }
 
   private def doRefresh(
@@ -774,8 +756,7 @@ object Ivm {
       scala.concurrent.Future[Unit]]()
     val commit: ZDelta.StateUpdate => Unit =
       u => pending.add(scala.concurrent.Future(
-        timed(s"merge ${u.path}")(
-          commitUpdate(store, stateName(view, u.path), u)))(statePool))
+        commitUpdate(store, stateName(view, u.path), u))(statePool))
     val localCapV = pinCap(deltas, q.tables)
     // Trace replay (see [[Trace]]): the small-batch local path records the
     // refresh walk once and replays it with fresh leaf rows on later
@@ -783,8 +764,7 @@ object Ivm {
     // not once per batch. Any guard failure falls back to a fresh
     // (re-recording) walk; partially replayed state commits are idempotent
     // because every update derives from the same frozen snapshot.
-    val traceOk = Trace.enabled && localCapV > 0 &&
-      sys.props.getOrElse("graft.pinMode", "lazy") == "lazy" &&
+    val traceOk = Trace.enabled && localCapV > 0 && !reliablePins &&
       Trace.traceable(q)
     val recorder = if (traceOk) new Trace.Recorder else null
     def checked(df: DataFrame): DataFrame = {
@@ -797,7 +777,7 @@ object Ivm {
       p => checked(snap(stateName(view, p))),
       broadcastDeltas,
       sliceFn = (p, kdf, ks) =>
-        timed(s"slice $p")(checked(snap.slice(stateName(view, p), kdf, ks))),
+        checked(snap.slice(stateName(view, p), kdf, ks)),
       namer = (n, p) => canon.getOrDefault(n, p),
       stateOpt = p => {
         val r = snap.get(stateName(view, p))
@@ -813,7 +793,7 @@ object Ivm {
       onUpdate = commit,
       recorder = recorder,
       insertOnly = store.getTag(s"$view/_insert_only").contains("true"))
-    // intra-batch delta CSE for shared CTE subtrees (see Ctx.sharedDelta)
+    // intra-batch delta CSE for shared CTE subtrees (see Ctx.sharedDeltaOnce)
     ZDelta.countShared(q, ctx.sharedCounts)
     // A batch that touches none of the view's base tables is a no-op —
     // return an empty ΔV with the right schema instead of erroring.
@@ -844,14 +824,14 @@ object Ivm {
         val replayed: Option[DataFrame] =
           if (!traceOk) None
           else Trace.tapeFor(store, view).flatMap(tape =>
-            timed("replay")(Trace.replay(
+            Trace.replay(
               base(q.tables.head).sparkSession, tape, sigStr,
               t => deltas(t),
               n => snap.get(n),
               p => snap.get(stateName(view, p)).isDefined,
-              commit)))
+              commit))
         val dv0 = replayed.getOrElse {
-          val d = timed("plan-delta")(ZDelta.delta(q, ctx))
+          val d = ZDelta.delta(q, ctx)
           // Per-table delta accumulators (join-side tables only): the NEXT
           // batch's join terms read current sides from them.
           ZDelta.queueAccUpdates(q, ctx, declared)
@@ -877,9 +857,8 @@ object Ivm {
         // SPJ views: fold ΔV into the stored multiset (reads pre-batch
         // top state through the snapshot; writes through the live store).
         q match {
-          case _: Aggregate   => ()
-          case _: Materialize => () // its delta queued its own state merge
-          case _              => mergeTop(store, snap, stateName(view, TOP), dv)
+          case _: Aggregate => ()
+          case _            => mergeTop(store, snap, stateName(view, TOP), dv)
         }
         dv
       } finally drain() // failure path: no commit may outlive the open txn
@@ -937,7 +916,7 @@ object Ivm {
   }
   private val sharedNamer: (IvmQuery, String) => String = (n, _) => sharedPath(n)
 
-  /** Materialize a SET of views with content-addressed interior states: a
+  /** Create a SET of views with content-addressed interior states: a
     * subtree appearing in several views (the poster's "IVM transforms
     * should be composable" goal) is materialized ONCE and reused — e.g.
     * two Q13 variants over the same per-customer order counts share that
@@ -1041,7 +1020,6 @@ object Ivm {
   private def interiorAggs(q: IvmQuery): Seq[Aggregate] = {
     def kids(n: IvmQuery): Seq[IvmQuery] = n match {
       case Aggregate(c, _, _)     => Seq(c)
-      case Materialize(c)         => Seq(c)
       case Filter(c, _)           => Seq(c)
       case Project(c, _)          => Seq(c)
       case Union(l, r)            => Seq(l, r)

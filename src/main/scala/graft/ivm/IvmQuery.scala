@@ -57,7 +57,6 @@ sealed trait IvmQuery {
     case RightJoin(l, r, _)  => l.tables ++ r.tables
     case FullJoin(l, r, _)   => l.tables ++ r.tables
     case Union(l, r)         => l.tables ++ r.tables
-    case Materialize(c)      => c.tables
     case TopK(c, _, _)       => c.tables
     case WindowDeco(c, _)    => c.tables
     case ExpandCount(c, _)   => c.tables
@@ -122,20 +121,6 @@ final case class FullJoin(left: IvmQuery, right: IvmQuery, keys: Seq[String])
   * node composes freely under filters, joins, and aggregates. Plain UNION
   * (set semantics) = `IvmQuery.distinct` over a Union. */
 final case class Union(left: IvmQuery, right: IvmQuery) extends IvmQuery
-
-/** MATERIALIZED interior subview: the child's output rows are kept as a
-  * Z-multiset state (row → count), maintained per batch like an SPJ view
-  * top. Parents read the state instead of recomputing the child — for a
-  * stateless compound CTE referenced from several consumers (the TPC-H
-  * Q21 `j` shape: two aggregates AND the top join all scan it), the
-  * child's base-scan join runs ZERO times per parent read at refresh;
-  * only the child's O(‖Δ‖) delta still touches base tables, once per
-  * batch. At scale the state is bucket-pruned like any other (reads are
-  * O(touched)), and the LSM store keeps the write O(‖Δ‖).
-  * [[SqlFrontend]] inserts this automatically around shared stateless
-  * compound CTEs (`-Dgraft.materializeCte=false` reverts); direct API
-  * callers may wrap any stateless subtree. */
-final case class Materialize(child: IvmQuery) extends IvmQuery
 
 /** ORDER BY + LIMIT as a READ-TIME decoration: the maintained state is the
   * CHILD's full multiset — a deletion inside the current top-k must promote

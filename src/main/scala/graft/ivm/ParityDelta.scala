@@ -83,7 +83,7 @@ object ParityDelta {
       delta(l, resolveDelta).unionByName(delta(r, resolveDelta))
 
     case _: Join | _: LeftJoin | _: RightJoin | _: FullJoin | _: TopK |
-        _: WindowDeco | _: ExpandCount | _: ScalarDeco | _: Materialize =>
+        _: WindowDeco | _: ExpandCount | _: ScalarDeco =>
       throw new UnsupportedOperationException(
         "IVM parity mode does not support joins, top-k, or windows " +
           "(reference ivm_rewrite_rule.hpp:282-283); use ZDelta / Ivm.refresh")

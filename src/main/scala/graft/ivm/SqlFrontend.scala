@@ -32,7 +32,7 @@ object SqlFrontend {
   def createImmv(spark: SparkSession, sql: String): (String, IvmQuery) =
     sql match {
       case CreateImmv(name, select) =>
-        val q = materializeShared(parseSelect(spark, select))
+        val q = parseSelect(spark, select)
         Ivm.createView(name, q)
         (name, q)
       case _ => throw new IllegalArgumentException(
@@ -42,58 +42,6 @@ object SqlFrontend {
   /** Parse a SELECT into the engine AST. */
   def parseSelect(spark: SparkSession, select: String): IvmQuery =
     foldTop(spark.sessionState.sqlParser.parsePlan(select))
-
-  /** Wrap every stateless compound (join-backed) subtree spliced at MORE
-    * THAN ONE position in a [[Materialize]]: parents then read a
-    * maintained interior multiset state instead of re-running the CTE's
-    * base-scan join once per consumer per batch (the TPC-H Q21 `j` shape —
-    * two aggregates and the top join all scan it). One wrapper INSTANCE
-    * per shared instance, so instance-identity sharing (canonical state
-    * naming, per-batch delta memoization) carries over to the wrapper.
-    *
-    * OFF BY DEFAULT (`-Dgraft.materializeCte=true` enables). Measured at
-    * sf0.1 (r08): materializing TPC-H Q21's `j` — an SPJ CTE whose output
-    * is O(base), ~600k rows — cost +4-6 s per create (building and
-    * storing the multiset), made every state read distributed (killing
-    * trace-record eligibility), and bought back almost nothing per
-    * refresh because the per-batch sharedCurrent cache and the
-    * touched-key scan pruning (ZDelta key pushdown) already bound each
-    * consumer's current read to O(touched). At 100 TB the state would
-    * DUPLICATE a base-sized join output per view — the right default is
-    * recompute-current over pruned scans; turn this on only for a CTE
-    * whose output is far smaller than its inputs. */
-  def materializeShared(q: IvmQuery): IvmQuery = {
-    if (!sys.props.getOrElse("graft.materializeCte", "false").toBoolean)
-      return q
-    val counts = new java.util.IdentityHashMap[IvmQuery, java.lang.Integer]
-    ZDelta.countShared(q, counts)
-    if (counts.isEmpty) return q
-    val wrap = new java.util.IdentityHashMap[IvmQuery, Materialize]
-    def rw(n: IvmQuery): IvmQuery = n match {
-      case j: graft.ivm.Join if counts.containsKey(j) =>
-        var w = wrap.get(j)
-        if (w == null) {
-          w = Materialize(graft.ivm.Join(rw(j.left), rw(j.right), j.keys))
-          wrap.put(j, w)
-        }
-        w
-      case s: Scan                     => s
-      case graft.ivm.Filter(c, p)      => graft.ivm.Filter(rw(c), p)
-      case graft.ivm.Project(c, cols)  => graft.ivm.Project(rw(c), cols)
-      case graft.ivm.Aggregate(c, k, a) => graft.ivm.Aggregate(rw(c), k, a)
-      case graft.ivm.Join(l, r, k)     => graft.ivm.Join(rw(l), rw(r), k)
-      case LeftJoin(l, r, k)           => LeftJoin(rw(l), rw(r), k)
-      case RightJoin(l, r, k)          => RightJoin(rw(l), rw(r), k)
-      case FullJoin(l, r, k)           => FullJoin(rw(l), rw(r), k)
-      case graft.ivm.Union(l, r)       => graft.ivm.Union(rw(l), rw(r))
-      case TopK(c, s, n2)              => TopK(rw(c), s, n2)
-      case WindowDeco(c, cols)         => WindowDeco(rw(c), cols)
-      case ExpandCount(c, cc)          => ExpandCount(rw(c), cc)
-      case ScalarDeco(c, subs, cols)   => ScalarDeco(rw(c), subs.map(rw), cols)
-      case m: Materialize              => m
-    }
-    rw(q)
-  }
 
   /** Top-of-view fold: positions where READ decorations may apply. A
     * SELECT list with uncorrelated scalar subqueries folds to
@@ -488,8 +436,6 @@ object SqlFrontend {
     else q match {
       case Scan(t) if defs.contains(t) => defs(t)
       case s: Scan                     => s
-      // substitution runs BEFORE materializeShared, so this is defensive
-      case Materialize(c)              => Materialize(substitute(c, defs))
       case graft.ivm.Filter(c, p)      => graft.ivm.Filter(substitute(c, defs), p)
       case graft.ivm.Project(c, cols)  => graft.ivm.Project(substitute(c, defs), cols)
       case graft.ivm.Aggregate(c, k, a) =>

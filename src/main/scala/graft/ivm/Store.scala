@@ -170,8 +170,7 @@ final class MemStore extends IvmStore {
   // collect per put and a fat broadcast per consuming term — net slower
   // on both the fresh-store gate path and warm creates. 64k keeps local
   // states cheap-to-collect and cheap-to-broadcast.
-  private val localRows =
-    sys.props.getOrElse("graft.memStateRows", (1 << 16).toString).toInt
+  private val localRows = 1 << 16
   /** Size memos: a KNOWN-big state skips the collect probe outright
     * (executeTake(cap+1) over an aggregate state materializes the whole
     * plan — probing it before checkpointing would execute the merge twice
@@ -270,7 +269,7 @@ object MemStore {
   /** Test hook: forget all size classes (suites reuse state names with
     * differently-sized data; stale classes are perf-only but make probes
     * non-deterministic to assert on). */
-  private[ivm] def clearSizeMemos(): Unit = { knownBig.clear(); knownSmall.clear() }
+  private[graft] def clearSizeMemos(): Unit = { knownBig.clear(); knownSmall.clear() }
 }
 
 /** Bucketed, manifest-versioned, LSM-layered parquet store — the at-scale
@@ -908,7 +907,7 @@ final class ParquetStore(
       // superset of updated's keys — a superset only costs an extra
       // touched bucket, never correctness); otherwise pin `updated` and
       // derive them from it.
-      val (touched, pinned) = Ivm.timed(s"m.touched $name") {
+      val (touched, pinned) =
         if (keyHint != null)
           (org.apache.spark.sql.GraftColumnOps.uncoalesced(keyHint)
             .select(bucketOf(bKeys).as(B)).collect().map(_.getInt(0)).toSet,
@@ -917,7 +916,6 @@ final class ParquetStore(
           val up = updated.withColumn(B, bucketOf(bKeys)).cache()
           (up.select(B).collect().map(_.getInt(0)).toSet, Some(up))
         }
-      }
       try {
         if (touched.isEmpty) return // empty batch — state unchanged
         val src = pinned.map(_.drop(B)).getOrElse(updated)
@@ -947,14 +945,14 @@ final class ParquetStore(
         lazy val baseBytes = sel.values.map(l => dirBytes(l.last)).sum
         if (canOverlay) {
           // O(‖Δ‖) append: updated rows only, dead keys as tombstones
-          Ivm.timed(s"m.overlay $name")(aligned(src)
+          aligned(src)
             .withColumn(DEAD, when(alive, lit(0)).otherwise(lit(1)))
             .withColumn(SEQ, lit(segV))
             .withColumn(B, bucketOf(bKeys))
             .repartition(buckets, col(B)) // one file per bucket per segment;
             // explicit count bounds the shuffle fanout to `buckets` tasks
             // (repartition(col) would spread over shuffle.partitions)
-            .write.partitionBy(B).mode("overwrite").parquet(s"$root/$rel"))
+            .write.partitionBy(B).mode("overwrite").parquet(s"$root/$rel")
           val written = discoverBuckets(rel)
           if (written.isEmpty) return // empty batch — state unchanged
           val chains = e.chains ++ written.map { case (b, p) =>
@@ -979,17 +977,16 @@ final class ParquetStore(
           // beneath it; delta rows override folded rows per merge key
           val foldSrc = aligned(src)
             .withColumn(DEAD, when(alive, lit(0)).otherwise(lit(1)))
-          val tail = Ivm.timed(s"m.minorread $name")(
-            foldSegments(readPaths(tailPaths, e), mergeKeys))
+          val tail = foldSegments(readPaths(tailPaths, e), mergeKeys)
           val newRows = StoreOps.antiByKeys(tail, src, mergeKeys)
             .unionByName(foldSrc)
-          Ivm.timed(s"m.minorwrite $name")(newRows
+          newRows
             .withColumn(SEQ, lit(segV))
             .withColumn(B, bucketOf(bKeys))
             .repartition(buckets, col(B)) // one file per bucket per segment;
             // explicit count bounds the shuffle fanout to `buckets` tasks
             // (repartition(col) would spread over shuffle.partitions)
-            .write.partitionBy(B).mode("overwrite").parquet(s"$root/$rel"))
+            .write.partitionBy(B).mode("overwrite").parquet(s"$root/$rel")
           val written = discoverBuckets(rel)
           // the folded overlay stacks directly on its bucket's base; a
           // touched bucket that wrote nothing (keyHint superset) keeps its
@@ -1007,18 +1004,18 @@ final class ParquetStore(
             val aliveRows = aligned(src.where(alive))
             if (oldPaths.isEmpty) aliveRows
             else {
-              val old = Ivm.timed(s"m.read $name")(
-                readEntry(e, oldPaths, sel.values.exists(_.lengthCompare(1) > 0))())
+              val old =
+                readEntry(e, oldPaths, sel.values.exists(_.lengthCompare(1) > 0))()
               StoreOps.antiByKeys(old, src, mergeKeys).unionByName(aliveRows)
             }
           }
-          Ivm.timed(s"m.write $name")(newRows
+          newRows
             .withColumn(DEAD, lit(0)).withColumn(SEQ, lit(segV))
             .withColumn(B, bucketOf(bKeys))
             .repartition(buckets, col(B)) // one file per bucket per segment;
             // explicit count bounds the shuffle fanout to `buckets` tasks
             // (repartition(col) would spread over shuffle.partitions)
-            .write.partitionBy(B).mode("overwrite").parquet(s"$root/$rel"))
+            .write.partitionBy(B).mode("overwrite").parquet(s"$root/$rel")
           val written = discoverBuckets(rel)
           // touched buckets collapse to the new segment (or vanish if now
           // empty); untouched buckets keep their old chains

@@ -208,7 +208,6 @@ private[ivm] object Trace {
       case Project(c, _)          => joinFree(c)
       case Union(l, r)            => joinFree(l) && joinFree(r)
       case Scan(_)                => true
-      case Materialize(c)         => joinFree(c)
       case TopK(c, _, _)          => joinFree(c)
       case WindowDeco(c, _)       => joinFree(c)
       case ExpandCount(c, _)      => joinFree(c)
@@ -225,7 +224,6 @@ private[ivm] object Trace {
       case RightJoin(l, r, _)    => noSketch(l) && noSketch(r)
       case FullJoin(l, r, _)     => noSketch(l) && noSketch(r)
       case Scan(_)               => true
-      case Materialize(c)        => noSketch(c)
       case TopK(c, _, _)         => noSketch(c)
       case WindowDeco(c, _)      => noSketch(c)
       case ExpandCount(c, _)     => noSketch(c)
@@ -360,8 +358,7 @@ private[ivm] object Trace {
       case Pin(tag, plan, schema) =>
         val swapped = swap(plan)
         if (!aborted) {
-          val rows = Ivm.timed(s"replay-pin $tag")(
-            GraftTemplates.collectLogical(spark, swapped)).toSeq
+          val rows = GraftTemplates.collectLogical(spark, swapped).toSeq
           roleRows(s"pin:$tag") = rows
           pinSchemas(s"pin:$tag") = schema
         }

@@ -61,10 +61,10 @@ object ZDelta {
       /** Maps a stateful node to its state path. Default: the positional
         * path (private per-view state). [[Ivm.refreshShared]] supplies a
         * content-addressed namer so identical subtrees across views hit
-        * the SAME state, and [[memo]] then computes each shared subtree's
-        * delta (and queues its StateUpdate) exactly once per batch. */
+        * the SAME state, and [[onceMemo]] then computes each shared
+        * subtree's delta (and queues its StateUpdate) exactly once per
+        * batch. */
       namer: (IvmQuery, String) => String = (_, p) => p,
-      memo: mutable.Map[String, DataFrame] = mutable.Map.empty,
       /** Optional state read: None when the state was never created. Used
         * by [[currentW]] for the per-table delta accumulators, which are
         * created lazily on a table's first delta — so a view that never
@@ -75,9 +75,10 @@ object ZDelta {
         * running a maintenance loop pass a per-view persistent map and
         * skip re-analyzing `Eval.eval(subtree)` on every refresh just to
         * type NULL columns. Default: fresh (no reuse, still dedupes
-        * within one delta computation). */
+        * within one delta computation). Concurrent: parallel walk threads
+        * ([[ZDelta.forkJoin]]) share it. */
       schemaMemo: mutable.Map[String, org.apache.spark.sql.types.StructType] =
-        mutable.Map.empty,
+        scala.collection.concurrent.TrieMap.empty,
       /** False when the caller discards the TOP-LEVEL ΔV (refreshState on
         * an Aggregate-top view reads the maintained state afterwards, not
         * the changelog): the top aggregate then skips pinning its state
@@ -129,17 +130,6 @@ object ZDelta {
         * instance at every use site). Populated by [[countShared]];
         * empty = no intra-batch delta CSE (the pre-existing behavior). */
       sharedCounts: java.util.IdentityHashMap[IvmQuery, java.lang.Integer] =
-        new java.util.IdentityHashMap,
-      /** Batch-scoped memo for the above: first reference computes the
-        * subtree's delta and pins it, every later reference reuses the
-        * pin — a triple-CTE view stops paying the CTE's base-scan join
-        * once per consumer. Identity-keyed: only safe because the keys
-        * are the literally-shared instances counted above. */
-      sharedDelta: java.util.IdentityHashMap[IvmQuery, DataFrame] =
-        new java.util.IdentityHashMap,
-      /** Batch-scoped memo for shared subtrees' CURRENT content (cached,
-        * not pinned — currents are O(base)); see [[currentW]]. */
-      sharedCurrent: java.util.IdentityHashMap[IvmQuery, DataFrame] =
         new java.util.IdentityHashMap) {
     /** True while a KEY-PRUNED current side is being composed (see
       * [[ZDelta.currentSide]]): the prune filter must reach the base
@@ -155,15 +145,25 @@ object ZDelta {
     }
     private[ivm] def bypassSharedCurrent: Boolean = bypassTL.get()
     private[ivm] def bypassSharedCurrent_=(b: Boolean): Unit = bypassTL.set(b)
-    /** Compute-once cells for this batch's memoized subtree deltas
-      * ([[ZDelta.memoized]]) and shared-CTE delta/current CSE: with
-      * parallel chain composition, the first thread to need a shared
-      * frame computes it and concurrent readers block until it is ready
-      * (compute-twice would double-pin and double-queue state updates). */
+    /** Compute-once cells: with parallel chain composition, the first
+      * thread to need a shared frame computes it and concurrent readers
+      * block until it is ready (compute-twice would double-pin and
+      * double-queue state updates).
+      *
+      * Batch-scoped memo of stateful subtree deltas by resolved state name
+      * ([[ZDelta.memoized]]): under a content-addressed [[namer]] each
+      * shared subtree's delta (and its StateUpdate) is computed once. */
     private[ivm] val onceMemo =
       new java.util.concurrent.ConcurrentHashMap[String, ZDelta.Once[DataFrame]]
+    /** Batch-scoped delta memo for the [[sharedCounts]] subtrees: the first
+      * reference computes the subtree's delta and pins it, every later
+      * reference reuses the pin — a triple-CTE view stops paying the CTE's
+      * base-scan join once per consumer. Identity-keyed: only safe because
+      * the keys are the literally-shared instances counted there. */
     private[ivm] val sharedDeltaOnce =
       new java.util.IdentityHashMap[IvmQuery, ZDelta.Once[DataFrame]]
+    /** Batch-scoped memo for shared subtrees' CURRENT content (cached, not
+      * pinned — currents are O(base)); see [[currentW]]. */
     private[ivm] val sharedCurrentOnce =
       new java.util.IdentityHashMap[IvmQuery, ZDelta.Once[DataFrame]]
     /** Queue a state update and fire [[onUpdate]]. Synchronized: parallel
@@ -196,9 +196,7 @@ object ZDelta {
       * the commit actions — the pin chain executes as stages of the
       * merges' own (concurrent) jobs instead of one serial driver-blocking
       * job per pin; concurrent consumers dedupe through the RDD cache
-      * locks. `-Dgraft.pinMode=eager` forces each pin as its own job at
-      * plan time; `-Dgraft.pinMode=cache` keeps the lazy-cache behavior
-      * (full lineage). Checkpointed pins free their blocks via the
+      * locks. Checkpointed pins free their blocks via the
       * ContextCleaner once the refresh drops them; unpersist() on them is
       * a harmless no-op. Like any localCheckpoint, losing an executor
       * mid-refresh fails the batch (retry the refresh) rather than
@@ -212,24 +210,19 @@ object ZDelta {
       * `sparkContext.setCheckpointDir` (fails fast otherwise); costs one
       * distributed write per pin — the price of the durability. */
     def pin(df: DataFrame, tag: String = "?"): DataFrame = {
-      val c = Ivm.timed(s"pin $tag") {
-        sys.props.getOrElse("graft.pinMode", "lazy") match {
-          case "cache" => df.cache()
-          case "eager" => df.localCheckpoint(true)
-          case _ if localCap > 0 =>
-            // small-batch path: one plain collect to a LocalRelation (the
-            // batch gate already bounds O(touched) frames). Driver-resident,
-            // so it needs no executor durability — reliable mode keeps it.
-            if (recorder != null) recorder.recordPin(tag, df)
-            Ivm.toLocal(df, s"pin:$tag")
-          case "reliable" =>
-            require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-              "graft.pinMode=reliable needs sparkContext.setCheckpointDir " +
-                "(an HDFS/S3-compatible path) before refresh")
-            df.checkpoint(false)
-          case _ => df.localCheckpoint(false)
-        }
-      }
+      val c =
+        if (localCap > 0) {
+          // small-batch path: one plain collect to a LocalRelation (the
+          // batch gate already bounds O(touched) frames). Driver-resident,
+          // so it needs no executor durability — reliable mode keeps it.
+          if (recorder != null) recorder.recordPin(tag, df)
+          Ivm.toLocal(df, s"pin:$tag")
+        } else if (Ivm.reliablePins) {
+          require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
+            "graft.pinMode=reliable needs sparkContext.setCheckpointDir " +
+              "(an HDFS/S3-compatible path) before refresh")
+          df.checkpoint(false)
+        } else df.localCheckpoint(false)
       pins.synchronized { pins += c }; c
     }
   }
@@ -308,7 +301,7 @@ object ZDelta {
 
   /** True when `q` maintains NO state of its own anywhere below (pure
     * scan/filter/project/join/union tree) — the precondition for reusing
-    * one walk path's delta at another path (see [[Ctx.sharedDelta]]). */
+    * one walk path's delta at another path (see [[Ctx.sharedDeltaOnce]]). */
   private def stateless(q: IvmQuery): Boolean = q match {
     case Scan(_)        => true
     case Filter(c, _)   => stateless(c)
@@ -325,7 +318,7 @@ object ZDelta {
     * positions (TPC-H Q15's `rev`, read by the main query AND its scalar
     * subquery) then resolves ONE state name everywhere: one state on
     * disk, one delta computation and one StateUpdate per batch (via
-    * [[Ctx.memo]]), instead of n positional twins each maintaining an
+    * [[Ctx.onceMemo]]), instead of n positional twins each maintaining an
     * identical copy. Create and refresh both derive names through this
     * map, so they agree by construction; nodes occurring once map to
     * their own position (identity with the plain positional namer). */
@@ -334,8 +327,7 @@ object ZDelta {
     val m = new java.util.IdentityHashMap[IvmQuery, String]
     def walk(n: IvmQuery, path: String): Unit = {
       n match {
-        case _: Aggregate | _: LeftJoin | _: RightJoin | _: FullJoin |
-             _: Materialize =>
+        case _: Aggregate | _: LeftJoin | _: RightJoin | _: FullJoin =>
           if (!m.containsKey(n)) m.put(n, path)
         case _ => ()
       }
@@ -344,7 +336,6 @@ object ZDelta {
         case Filter(c, _)           => walk(c, path + ".0")
         case Project(c, _)          => walk(c, path + ".0")
         case Aggregate(c, _, _)     => walk(c, path + ".0")
-        case Materialize(c)         => walk(c, path + ".0")
         case Join(l, r, _)          => walk(l, path + ".0"); walk(r, path + ".1")
         case LeftJoin(l, r, _)      => walk(l, path + ".0"); walk(r, path + ".1")
         case RightJoin(l, r, _)     => walk(l, path + ".0"); walk(r, path + ".1")
@@ -367,8 +358,6 @@ object ZDelta {
     * tests sharing with one map hit. */
   def countShared(q: IvmQuery,
       into: java.util.IdentityHashMap[IvmQuery, java.lang.Integer]): Unit = {
-    val seenM = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[IvmQuery, java.lang.Boolean])
     def walk(n: IvmQuery): Unit = {
       n match {
         case j: Join if stateless(j) =>
@@ -381,12 +370,6 @@ object ZDelta {
         case Filter(c, _)           => walk(c)
         case Project(c, _)          => walk(c)
         case Aggregate(c, _, _)     => walk(c)
-        // barrier: a Materialize instance computes its child's delta ONCE
-        // (memoized by state name), so repeat visits of a spliced instance
-        // must not inflate the child's share counts — an inflated count
-        // would wrap the child's single evaluation in a useless CSE pin
-        case mz: Materialize =>
-          if (seenM.add(mz)) walk(mz.child)
         case Join(l, r, _)          => walk(l); walk(r)
         case LeftJoin(l, r, _)      => walk(l); walk(r)
         case RightJoin(l, r, _)     => walk(l); walk(r)
@@ -435,7 +418,6 @@ object ZDelta {
       case RightJoin(l, r, _) => linear(l) ++ linear(r)
       case FullJoin(l, r, _)  => linear(l) ++ linear(r)
       case _: Aggregate       => Set.empty
-      case _: Materialize    => Set.empty // reads its own state, like Aggregate
       case _: TopK | _: WindowDeco | _: ExpandCount | _: ScalarDeco =>
         Set.empty // decorations
     }
@@ -452,7 +434,6 @@ object ZDelta {
         val own = if (aggs.exists(isSketch)) linear(c) & declared
                   else Set.empty[String]
         own ++ accTables(c, declared)
-      case Materialize(c)     => accTables(c, declared)
       case Union(l, r)        => accTables(l, declared) ++ accTables(r, declared)
       case Join(l, r, _)      => joinAcc(l, r)
       case LeftJoin(l, r, _)  => joinAcc(l, r)
@@ -504,12 +485,6 @@ object ZDelta {
       ctx.state(ctx.namer(agg, path))
         .select(keys.map(col) ++ aggs.map(Eval.stateOutput): _*)
         .withColumn(WEIGHT, lit(1L))
-    // materialized subview: its current content IS the maintained multiset
-    // (pre-batch through the snapshot) — the child never re-evaluates here
-    case m: Materialize =>
-      val cols = outputNames(m.child, ctx)
-      ctx.state(ctx.namer(m, path))
-        .select(cols.map(col) :+ col(HCOUNT).cast("long").as(WEIGHT): _*)
     case lj @ LeftJoin(l, r, keys) =>
       outerCurrent(l, r, keys, ctx, ctx.namer(lj, path), path,
         preserveL = true, preserveR = false)
@@ -696,15 +671,6 @@ object ZDelta {
     case agg @ Aggregate(_, _, _) =>
       memoized(ctx, q, path)(p => deltaAggregate(agg, ctx, p))
 
-    // Materialized interior subview: Δ(M(c)) = Δ(c) — the changelog passes
-    // through unchanged — plus one queued multiset merge so parents' later
-    // CURRENT reads (this batch's siblings read pre-batch state through the
-    // snapshot; next batch reads post-merge) see the child without
-    // recomputing it. Memoized by resolved state name: a CTE spliced at n
-    // positions computes Δ once and queues ONE update.
-    case m: Materialize =>
-      memoized(ctx, q, path)(name => deltaMaterialize(m, ctx, name, path))
-
     case _: TopK | _: WindowDeco | _: ExpandCount =>
       throw new UnsupportedOperationException(
         "TopK/window/expand is a read-time decoration at the view top; Ivm " +
@@ -722,40 +688,6 @@ object ZDelta {
     // the same canonical-named spliced subtree — exactly one computation,
     // exactly one queued StateUpdate, concurrent callers block
     ctx.onceMemo.computeIfAbsent(name, _ => new Once[DataFrame]).get(f(name))
-  }
-
-  /** Δ + state merge of a [[Materialize]] node. The merge mirrors the SPJ
-    * top-state shape (row multiset, HCOUNT, group death at 0) and the
-    * delta-accumulator diff: adjust counts from the batch alone, slice old
-    * counts for touched rows only — O(‖Δ‖) reads and writes, bucket-pruned
-    * at scale. Returns Δ(child) for the parent's own terms. */
-  private def deltaMaterialize(
-      m: Materialize, ctx: Ctx, name: String, path: String): DataFrame = {
-    val d0 = delta(m.child, ctx, path + ".0")
-    // Δ(child) feeds the count adjustment AND every parent term — pin it
-    // once (skip when the child delta is already a pinned local frame,
-    // e.g. a sharedDelta CSE hit: a pin-of-a-pin is pure overhead).
-    val d = d0.queryExecution.logical match {
-      case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false,
-          _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation) => d0
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => d0
-      case _ => ctx.pin(d0, s"$path.m")
-    }
-    val cols = outputNames(m.child, ctx)
-    def bcast(df: DataFrame): DataFrame =
-      if (ctx.broadcastDeltas) broadcast(df) else df
-    val dAdj = ctx.pin(
-      d.groupBy(cols.map(col): _*).agg(sum(col(WEIGHT)).as("__ivm_madj")),
-      s"$path.madj")
-    val oldTouched = ctx.slice(name, dAdj, cols)
-      .withColumnRenamed(HCOUNT, "__ivm_moldc")
-    val updated = leftOuterByKeys(dAdj, oldTouched, cols, hint = bcast)
-      .select(cols.map(col) :+
-        (coalesce(col("__ivm_moldc"), lit(0L)) + col("__ivm_madj"))
-          .as(HCOUNT): _*)
-    ctx.queue(StateUpdate(name, cols, updated, bucketKeys = cols,
-      keyHint = dAdj))
-    d
   }
 
   // ---------------------------------------------------------------- joins
@@ -779,25 +711,20 @@ object ZDelta {
   // current's NULL-key rows is sound too. Multi-key joins prune each key
   // independently (a per-key superset of the exact tuple set).
 
-  private def keyPushdownMode: String =
-    sys.props.getOrElse("graft.keyPushdown", "auto")
-  private def keyPushdownMax: Int =
-    sys.props.getOrElse("graft.keyPushdownMax", "8192").toInt
+  /** Largest distinct-key count a single key's IN-list may carry; a key
+    * touching more values than this is left unpruned. */
+  private val KeyPushdownMax = 8192
 
   /** May this walk inject batch-specific literal predicates? Literal
     * IN-lists bake ONE batch's keys into the plan, so a walk that could
     * still be trace-recorded must not contain them (a replayed tape would
     * filter every later batch by the recorded batch's keys — silently
-    * wrong). "auto" prunes exactly the walks that already cannot record:
-    * no recorder (untraceable view, replay disabled, distributed batch)
-    * or a recording guard already invalidated it (e.g. the q113-class
-    * distributed state read). "always" prunes every walk and forfeits the
-    * tape; "off" disables. */
-  private def pruneAllowed(ctx: Ctx): Boolean = keyPushdownMode match {
-    case "off"    => false
-    case "always" => true // tape forfeited in currentSide, only on real prune
-    case _        => ctx.recorder == null || ctx.recorder.invalid
-  }
+    * wrong). Prunes exactly the walks that already cannot record: no
+    * recorder (untraceable view, replay disabled, distributed batch) or a
+    * recording guard already invalidated it (e.g. the q113-class
+    * distributed state read). */
+  private def pruneAllowed(ctx: Ctx): Boolean =
+    ctx.recorder == null || ctx.recorder.invalid
 
   /** Driver-resident rows of a small frame: direct for local/pinned
     * frames (LocalRelation, possibly under the pins' coalesce(1)); an
@@ -825,7 +752,7 @@ object ZDelta {
   /** `key IN (delta's distinct values)` conjunction for an equi-join's
     * current side. None when the delta rows are not driver-resident, or
     * per key when the key is absent/complex/binary-typed or its distinct
-    * count exceeds [[keyPushdownMax]] (only that key's conjunct drops).
+    * count exceeds [[KeyPushdownMax]] (only that key's conjunct drops).
     * NULL delta keys are skipped — see soundness note above. An EMPTY
     * delta side yields `IN ()` = false, which Catalyst folds to an empty
     * relation: a no-op term costs no job at all. */
@@ -860,7 +787,7 @@ object ZDelta {
               val r = it.next()
               if (!r.isNullAt(i)) {
                 distinct += r.get(i, dt)
-                if (distinct.size > keyPushdownMax) over = true
+                if (distinct.size > KeyPushdownMax) over = true
               }
             }
             if (over) None
@@ -884,20 +811,14 @@ object ZDelta {
     * the batch's touched keys when [[pruneAllowed]] and the delta side is
     * driver-resident; plain (cache-shared) current otherwise. Callers
     * must force the delta side BEFORE calling (its walk may invalidate
-    * the recorder, which "auto" mode consults). */
+    * the recorder, which [[pruneAllowed]] consults). */
   private def currentSide(
       side: IvmQuery, sidePath: String, deltaOther: DataFrame,
       keys: Seq[String], ctx: Ctx): DataFrame = {
     val cond =
       if (!pruneAllowed(ctx)) None
       else touchedKeyFilter(deltaOther, keys, ctx)
-    cond.foreach { _ =>
-      // "always" forfeits the tape only when literals are actually injected
-      // (a never-pruned walk keeps its replay eligibility)
-      if (keyPushdownMode == "always" && ctx.recorder != null)
-        ctx.recorder.invalidate("key-pushdown literals")
-      prunes.incrementAndGet()
-    }
+    if (cond.isDefined) prunes.incrementAndGet()
     cond match {
       case Some(f) =>
         val prev = ctx.bypassSharedCurrent
@@ -1007,7 +928,6 @@ object ZDelta {
       keys ++ outputNames(l, ctx).filterNot(keys.contains) ++
         outputNames(r, ctx).filterNot(keys.contains)
     case Union(l, _) => outputNames(l, ctx) // sides align by contract
-    case Materialize(c) => outputNames(c, ctx)
     case TopK(c, _, _) => outputNames(c, ctx)
     case WindowDeco(_, cols) => cols.map(colName)
     case ExpandCount(c, n) => outputNames(c, ctx).filterNot(_ == n)

@@ -17,7 +17,7 @@ object CteProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 5
-    val b0 = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
@@ -27,12 +27,7 @@ object CteProbe {
       .config("spark.broadcast.compress", "false")
       .config("spark.shuffle.compress", "false")
       .config("spark.shuffle.spill.compress", "false")
-    // A/B: -Dgraft.probeCoalesce=true adds size-first AQE coalescing
-    val b = if (sys.props.get("graft.probeCoalesce").contains("true"))
-      b0.config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-    else b0
-    val spark = b.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val jobLog = sys.env.get("SPARK_GRAFT_JOBLOG").contains("true")

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * a representative REFRESH-side frame:
   *
   *   q113: one "Δorders ⋈ current(lineitem)" join-delta term — before
-  *     (keyPushdown=off) streams the whole lineitem scan; after
-  *     (keyPushdown=auto) shows the touched-key IN filter pushed into the
-  *     scan (PushedFilters) so the term reads O(touched keys).
+  *     (no touched-key pruning) streams the whole lineitem scan; after
+  *     (ZDelta.currentSide pruning) shows the touched-key IN filter pushed
+  *     into the scan (PushedFilters) so the term reads O(touched keys).
   *
   *   sbt "runMain graft.tools.RefreshPlanDump <sfDir> <outDir>"
   */
@@ -56,7 +56,7 @@ object RefreshPlanDump {
         Seq("o_orderkey"))
     write("q113_tpch_q21_before.txt",
       "# q113 (TPC-H Q21) refresh-side evidence — BEFORE (r07 behavior,\n" +
-        "# -Dgraft.keyPushdown=off): the \"Δorders ⋈ current(lineitem)\"\n" +
+        "# no touched-key pruning): the \"Δorders ⋈ current(lineitem)\"\n" +
         "# join-delta term streams the WHOLE lineitem scan per batch —\n" +
         "# note the parquet scan below has no orderkey filter\n" +
         "# (PushedFilters: []); the gated query's final read frame is a\n" +
@@ -71,7 +71,7 @@ object RefreshPlanDump {
         .where(col("o_orderkey").isin(keys: _*)), Seq("o_orderkey"))
     write("q113_tpch_q21_after.txt",
       "# q113 (TPC-H Q21) refresh-side evidence — AFTER (r08,\n" +
-        "# graft.keyPushdown=auto, ZDelta.currentSide): the current side is\n" +
+        "# ZDelta.currentSide): the current side is\n" +
         "# filtered by the batch's touched orderkeys BEFORE the join; the\n" +
         "# IN predicate reaches the parquet scan (PushedFilters shows the\n" +
         "# orderkey In/range predicate), so the term reads O(touched keys)\n" +

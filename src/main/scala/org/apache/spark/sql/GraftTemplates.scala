@@ -470,19 +470,9 @@ object GraftTemplates {
     else Some(Right(rows))
   }
 
-  // dev instrumentation (enable with -Dgraft.timing=true)
-  private def t[A](tag: String)(f: => A): A =
-    if (!sys.props.get("graft.timing").contains("true")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"        [tpl] $tag ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
-    }
-
   private def run(df: DataFrame,
       exec: SparkPlan => Array[InternalRow]): Array[InternalRow] =
-    runCore(df.sparkSession, t("analyze")(df.queryExecution.analyzed),
+    runCore(df.sparkSession, df.queryExecution.analyzed,
       () => exec(df.queryExecution.executedPlan), exec, () => df)
 
   /** Core of [[run]] over an ALREADY-ANALYZED plan. `fallback` executes a
@@ -501,7 +491,7 @@ object GraftTemplates {
       return fallback()
     if (cache.size > 2048) clear() // runaway-key backstop; templates rebuild
     val params = paramsOf(analyzed)
-    val key = t("key")(cacheKey(analyzed))
+    val key = cacheKey(analyzed)
     val tplSession = sessionFor(spark)
     val tpl = cache.get(key) match {
       case Some(t) if t.plan == null => // untemplatable structure
@@ -587,9 +577,9 @@ object GraftTemplates {
     // copies made during substitution capture the ACTIVE session at node
     // construction; without one (e.g. a store commit on a non-query thread)
     // the fresh nodes would carry session = null and NPE at execute
-    val fresh = t("subst")(tplSession.withActive { substituted(tpl, params) })
+    val fresh = tplSession.withActive { substituted(tpl, params) }
     lastPlanDump = fresh.toString
-    val out = t("exec")(tplSession.withActive { exec(fresh) })
+    val out = tplSession.withActive { exec(fresh) }
     if (sys.props.get("graft.planTemplates.verify").contains("true")) {
       val ref = mkDf().queryExecution.executedPlan.executeCollect()
       val a = out.map(_.toString).sorted.toSeq

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
+import org.scalatest.{BeforeAndAfterAll, Suite}
+
+import graft.ivm.MemStore
 
 /** One shared local session for all suites. */
 object SparkTestBase {
@@ -15,11 +18,31 @@ object SparkTestBase {
     .getOrCreate()
 }
 
-trait SparkTestBase {
+trait SparkTestBase extends BeforeAndAfterAll { this: Suite =>
+  /** MemStore's size-class memos are process-global and keyed by state
+    * name: a state classified big by one suite would change another
+    * suite's fast-path counts. Each suite starts from no memos. */
+  override protected def beforeAll(): Unit = {
+    MemStore.clearSizeMemos()
+    super.beforeAll()
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkTestBase.spark
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Run `f` with the given system properties set, restoring the previous
+    * values afterwards. */
+  def withProps[A](props: Map[String, String])(f: => A): A = {
+    val old = props.keys.map(k => k -> sys.props.get(k)).toMap
+    props.foreach { case (k, v) => sys.props(k) = v }
+    try f
+    finally old.foreach {
+      case (k, Some(v)) => sys.props(k) = v
+      case (k, None)    => sys.props.remove(k)
+    }
   }
 
   def df(schemaDDL: String, rows: Seq[Row]): DataFrame =

@@ -8,26 +8,14 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The IVM invariant (SURVEY.md §5.3, the poster's correctness property):
-  * for random base tables T, delta batches ΔT, and supported view shapes Q:
-  *
-  *     refresh(create(Q, T), ΔT)  ==  Q(T ⊎ ΔT)
-  *
-  * Deletes are sampled from existing base rows (the reference's update
-  * model — delete + insert of existing rows, README.md:10); phantom deletes
-  * are out of contract for both engines.
-  *
-  * Uses ScalaCheck generators with fixed seeds (deterministic, no
-  * scalatestplus bridge needed). Subsumes the golden tests across a far
-  * larger shape × data space, including joins and nested aggregates the
-  * reference never reaches.
-  */
-class IvmPropertySpec extends AnyFunSuite with SparkTestBase {
-
+/** Generators and view shapes of the IVM invariant, shared with
+  * [[ModeEquivalenceSpec]]. Rows are `(g STRING, h INT, v INT)`; table `u`
+  * keeps `(g, h)`. */
+object IvmPropertySpec {
   // Soak knob: -Divm.seedBase=N shifts the deterministic seed window so CI
   // stays reproducible while ad-hoc soaks explore fresh cases.
-  private val SeedBase = sys.props.getOrElse("ivm.seedBase", "0").toLong
-  private val Cases = 10
+  val SeedBase = sys.props.getOrElse("ivm.seedBase", "0").toLong
+  val Cases = 10
 
   private val keys = Gen.frequency(
     8 -> Gen.oneOf("a", "b", "c", "d"),
@@ -37,20 +25,16 @@ class IvmPropertySpec extends AnyFunSuite with SparkTestBase {
     v <- Gen.oneOf(Gen.const(null), Gen.choose(-50, 50)) // null v exercises SUM/COUNT null rules
   } yield Row(g, h, v)
 
-  private val genTable = Gen.resize(18, Gen.listOf(genRow))
+  val genTable = Gen.resize(18, Gen.listOf(genRow))
 
   /** Deltas: inserts are arbitrary rows; deletes are existing base rows. */
-  private def genDelta(baseRows: List[Row]): Gen[List[Row]] = for {
+  def genDelta(baseRows: List[Row]): Gen[List[Row]] = for {
     ins <- Gen.resize(10, Gen.listOf(genRow.map(r => Row(r(0), r(1), r(2), true))))
     del <- if (baseRows.isEmpty) Gen.const(Nil)
            else Gen.someOf(baseRows).map(_.toList.map(r => Row(r(0), r(1), r(2), false)))
   } yield ins ++ del
 
-  private def mkDf(rows: Seq[Row], withMult: Boolean): DataFrame =
-    df(if (withMult) s"g STRING, h INT, v INT, ${IvmCore.MULT} BOOLEAN"
-       else "g STRING, h INT, v INT", rows)
-
-  private def sample[A](g: Gen[A], seed: Long): A =
+  def sample[A](g: Gen[A], seed: Long): A =
     g.pureApply(Gen.Parameters.default, Seed(seed))
 
   /** The q113 topology at property scale: a literally-SHARED join
@@ -82,7 +66,7 @@ class IvmPropertySpec extends AnyFunSuite with SparkTestBase {
       Seq(col("g"), col("sv")))
   }
 
-  private val shapes: Seq[(String, IvmQuery)] = {
+  val shapes: Seq[(String, IvmQuery)] = {
     def sc = Scan("t")
     Seq(
       "scan" -> sc,
@@ -286,6 +270,32 @@ class IvmPropertySpec extends AnyFunSuite with SparkTestBase {
           col("v") > lit(2) * col("__sq0")),
         Seq(col("g"), col("v"))))
   }
+
+  /** DDL of a generated table, with the delta MULT column when `withMult`. */
+  def rowDdl(withMult: Boolean): String =
+    if (withMult) s"g STRING, h INT, v INT, ${IvmCore.MULT} BOOLEAN"
+    else "g STRING, h INT, v INT"
+}
+
+/** The IVM invariant (SURVEY.md §5.3, the poster's correctness property):
+  * for random base tables T, delta batches ΔT, and supported view shapes Q:
+  *
+  *     refresh(create(Q, T), ΔT)  ==  Q(T ⊎ ΔT)
+  *
+  * Deletes are sampled from existing base rows (the reference's update
+  * model — delete + insert of existing rows, README.md:10); phantom deletes
+  * are out of contract for both engines.
+  *
+  * Uses ScalaCheck generators with fixed seeds (deterministic, no
+  * scalatestplus bridge needed). Subsumes the golden tests across a far
+  * larger shape × data space, including joins and nested aggregates the
+  * reference never reaches.
+  */
+class IvmPropertySpec extends AnyFunSuite with SparkTestBase {
+  import IvmPropertySpec._
+
+  private def mkDf(rows: Seq[Row], withMult: Boolean): DataFrame =
+    df(rowDdl(withMult), rows)
 
   // INSERT-ONLY extremum mode: same invariant over insert-only deltas
   // (deletes stripped), view created with insertOnly=true — the fold-only

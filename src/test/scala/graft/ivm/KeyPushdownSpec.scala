@@ -6,14 +6,13 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Maintenance equivalence of the touched-key scan pruning
-  * (`graft.keyPushdown`): the same batch sequence refreshed under
-  * `always` (every eligible join-delta current side gets the literal-IN
-  * prune) and `off` (no pruning) must leave IDENTICAL view contents, and
-  * the `always` run must actually prune (ZDelta.prunes advances) — the
-  * soundness of dropping non-touched-key current rows before an equi-join
-  * was previously covered only incidentally by suites whose recorder
-  * happened to invalidate.
+/** Maintenance soundness of the touched-key scan pruning
+  * (ZDelta.currentSide): a batch sequence refreshed with every eligible
+  * join-delta current side pruned to the batch's literal-IN key set must
+  * leave the view equal to a full recompute, and the run must actually
+  * prune (ZDelta.prunes advances). Pruning fires only on walks that cannot
+  * trace-record, so the run disables trace replay (`graft.traceReplay=
+  * false`): no walk gets a recorder, and every eligible term prunes.
   *
   * Trap batches included deliberately:
   *   - multi-key join (per-key IN conjunction is a superset of the exact
@@ -22,20 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     key set),
   *   - all-NULL-key delta batch (the IN list is empty for that key → the
   *     term folds to empty; NULL never matches an equi-join, so the
-  *     unpruned run agrees).
+  *     recompute agrees).
   */
 class KeyPushdownSpec extends AnyFunSuite with SparkTestBase {
-
-  private def withMode[A](mode: String)(f: => A): A = {
-    val prev = sys.props.get("graft.keyPushdown")
-    sys.props("graft.keyPushdown") = mode
-    try f finally {
-      prev match {
-        case Some(v) => sys.props("graft.keyPushdown") = v
-        case None    => sys.props.remove("graft.keyPushdown")
-      }
-    }
-  }
 
   private def mkT(rows: Seq[Row], withMult: Boolean): DataFrame =
     df(if (withMult) s"g STRING, k INT, v INT, ${IvmCore.MULT} BOOLEAN"
@@ -80,7 +68,7 @@ class KeyPushdownSpec extends AnyFunSuite with SparkTestBase {
     "loj" -> LeftJoin(Project(Scan("t"), Seq(col("g"), col("v"))),
       Project(Scan("u"), Seq(col("g"), col("h"))), Seq("g")))
 
-  private def runAll(mode: String): Map[String, Map[Row, Int]] = withMode(mode) {
+  private def runAll(): Map[String, Map[Row, Int]] = {
     val base: String => DataFrame = {
       case "t" => mkT(t0, withMult = false)
       case "u" => mkU(u0, withMult = false)
@@ -96,17 +84,11 @@ class KeyPushdownSpec extends AnyFunSuite with SparkTestBase {
     }.toMap
   }
 
-  test("keyPushdown=always == off across multi-batch maintenance, and prunes fire") {
+  test("key-pruned multi-batch maintenance == recompute, and prunes fire") {
     val before = ZDelta.prunes.get()
-    val always = runAll("always")
-    val pruned = ZDelta.prunes.get() - before
-    assert(pruned > 0, "keyPushdown=always never pruned a current side")
-    val off = runAll("off")
-    for ((name, want) <- off)
-      assert(always(name) == want,
-        s"$name: always=${always(name).toSeq.sortBy(_.toString)} " +
-          s"off=${want.toSeq.sortBy(_.toString)}")
-    // and both agree with a full recompute over the applied deltas
+    val pruned = withProps(Map("graft.traceReplay" -> "false"))(runAll())
+    assert(ZDelta.prunes.get() - before > 0, "no current side was key-pruned")
+    // the pruned run agrees with a full recompute over the applied deltas
     val base: String => DataFrame = {
       case "t" => mkT(t0, withMult = false)
       case "u" => mkU(u0, withMult = false)
@@ -116,7 +98,9 @@ class KeyPushdownSpec extends AnyFunSuite with SparkTestBase {
     for ((name, q) <- shapes) {
       val want = Ivm.recompute(q, base, all.get).collect().toSeq
         .groupBy(identity).view.mapValues(_.size).toMap
-      assert(off(name) == want, s"$name: off run disagrees with recompute")
+      assert(pruned(name) == want,
+        s"$name: pruned=${pruned(name).toSeq.sortBy(_.toString)} " +
+          s"recompute=${want.toSeq.sortBy(_.toString)}")
     }
   }
 }

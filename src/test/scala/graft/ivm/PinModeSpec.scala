@@ -15,16 +15,6 @@ class PinModeSpec extends AnyFunSuite with SparkTestBase {
 
   private val M = IvmCore.MULT
 
-  private def withProps(props: Map[String, String])(f: => Unit): Unit = {
-    val old = props.keys.map(k => k -> sys.props.get(k)).toMap
-    props.foreach { case (k, v) => sys.props(k) = v }
-    try f
-    finally old.foreach {
-      case (k, Some(v)) => sys.props(k) = v
-      case (k, None)    => sys.props.remove(k)
-    }
-  }
-
   private def run(): DataFrame = {
     val store = new MemStore
     val t = df("g STRING, v INT",
