@@ -51,15 +51,12 @@ object Ivm {
   // them concurrently overlaps their per-part fixed floors (walk, pins,
   // seed jobs). A CACHED pool, not statePool: a part's own refresh awaits
   // statePool commit futures, so running parts on statePool could starve
-  // the commits they wait for. Gated on IvmStore.concurrentParts (a store
-  // whose transaction is a cross-thread lock keeps parts serial) and on
-  // the same kill switch as the walk-level fork.
+  // the commits they wait for. Gated on IvmStore.concurrentParts: a store
+  // whose transaction is a cross-thread lock keeps parts serial.
   private val partsPool = java.util.concurrent.Executors.newCachedThreadPool(
     (r: Runnable) => {
       val t = new Thread(r, "ivm-parts"); t.setDaemon(true); t
     })
-  private def parallelParts: Boolean =
-    !sys.props.get("graft.parallelWalk").contains("false")
   /** Run `thunks` on the parts pool. Every part is awaited before the
     * first failure (in submission order) is rethrown un-wrapped: a part
     * still running after its caller's transaction closed would publish
@@ -212,7 +209,7 @@ object Ivm {
             createStates(c, base, store, canonNamer(c, view),
               topName = stateName(view, TOP), skipExisting = false,
               insertOnly = insertOnly)
-          if (store.concurrentParts && parallelParts && subs.nonEmpty)
+          if (store.concurrentParts && subs.nonEmpty)
             inPartsPool[Unit](
               subs.zipWithIndex.map { case (s, i) => () => subCreate(s, i) }
                 :+ (() => childCreate()))
@@ -541,23 +538,11 @@ object Ivm {
   private[ivm] def collectLocal(df: DataFrame, cap: Int, role: String = "",
       overCapPin: Boolean = false): Option[DataFrame] = {
     import org.apache.spark.sql.GraftTemplates
-    // logical-plan match, NOT optimizedPlan: running the main-session
-    // optimizer here just to detect "already local" cost a full Catalyst
-    // pass per delta collect (see [[toLocal]]); compound all-local frames
-    // fall through to the template-cached inline path below instead
-    df.queryExecution.logical match {
+    localLeaf(df) match {
       // already local (e.g. a cascade changelog feed): re-tag so the frame
       // is a plan-template substitution point, not a per-batch literal
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        Some(GraftTemplates.taggedLocal(df.sparkSession,
-          org.apache.spark.sql.catalyst.types.DataTypeUtils
-            .fromAttributes(l.output), l.data, role).coalesce(1))
-      case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false,
-          l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation) =>
-        Some(GraftTemplates.taggedLocal(df.sparkSession,
-          org.apache.spark.sql.catalyst.types.DataTypeUtils
-            .fromAttributes(l.output), l.data, role).coalesce(1))
-      case _ =>
+      case Some(l) => Some(retag(df, l, role))
+      case None =>
         // An ALL-LOCAL-LEAF frame (cascade changelog over a replayed ΔV,
         // derived batch frames) routes through the template cache: a
         // repeated probe shape reuses its physical plan, and a
@@ -606,17 +591,22 @@ object Ivm {
     }
   }
 
-  // NOTE (r08, rejected design): pin collects were briefly made ASYNC — a
-  // background pool ran GraftTemplates.collect while the walk kept
-  // composing, with the LocalRelation holding a block-on-first-access
-  // rows Seq. It cannot work: Catalyst's QueryPlan._expressions traverses
-  // every Seq product element of a node looking for expressions, so the
-  // pin's OWN Dataset construction forces the rows synchronously — zero
-  // overlap, measured identical to the serial cadence. Overlap of
-  // independent subview chains would need walk-level parallelism (two
-  // composition threads), which conflicts with the recorder's ordered
-  // tape and the single-threaded Ctx buffers — left on the
-  // rejected-ideas list with this note.
+  // NOTE (rejected design): ASYNC pin collects — a background pool running
+  // GraftTemplates.collect while the walk kept composing — cannot work:
+  // Catalyst's QueryPlan._expressions traverses every Seq product element
+  // of a node, so the pin's OWN Dataset construction forces the rows
+  // synchronously (measured identical to the serial cadence). Pins overlap
+  // through walk-level parallelism instead (ZDelta.forkJoin): on q113 at
+  // sf0.1, 4 interleaved pairs on a 4-core host, the fork's steady refresh
+  // was ~5.5 s against ~6.3 s serial.
+
+  /** A fresh param-tagged, coalesced copy of `df`'s local relation `l`. */
+  private def retag(df: DataFrame,
+      l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation,
+      role: String): DataFrame =
+    org.apache.spark.sql.GraftTemplates.taggedLocal(df.sparkSession,
+      org.apache.spark.sql.catalyst.types.DataTypeUtils
+        .fromAttributes(l.output), l.data, role).coalesce(1)
 
   /** Collect a frame the caller already gated as small (every pinned
     * intermediate is O(touched) of a gated batch) — one plain collect, no
@@ -626,34 +616,21 @@ object Ivm {
     * a 32-partition micro-shuffle — measured ~5× per action on a 15k-row
     * frame. Joins against big relations still broadcast the local side,
     * so nothing downstream collapses onto one task. */
-  private[ivm] def toLocal(df: DataFrame, role: String = ""): DataFrame = {
-    import org.apache.spark.sql.GraftTemplates
-    // Match on the LOGICAL plan: the previous `optimizedPlan` match ran
-    // the main-session optimizer on the walk thread for EVERY pin — 0.3 to
-    // 0.8 s per big composed pin at sf0.1, the dominant slice of the
-    // multi-state view floor (r08 profile). Frames that would have folded
-    // to a LocalRelation under the optimizer now route through the
-    // template-cached collect instead, which executes all-local plans
-    // inline on the driver without a main-session optimizer pass.
-    df.queryExecution.logical match {
+  private[ivm] def toLocal(df: DataFrame, role: String = ""): DataFrame =
+    localLeaf(df) match {
       // already a local (or a pin: coalesce(1) over one) — re-tag as a
       // fresh substitution point, no execution at all
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        GraftTemplates.taggedLocal(df.sparkSession,
-          org.apache.spark.sql.catalyst.types.DataTypeUtils
-            .fromAttributes(l.output), l.data, role).coalesce(1)
-      case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false,
-          l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation) =>
-        GraftTemplates.taggedLocal(df.sparkSession,
-          org.apache.spark.sql.catalyst.types.DataTypeUtils
-            .fromAttributes(l.output), l.data, role).coalesce(1)
-      case _ =>
-        // template-cached execution: the pin's plan structure repeats every
-        // batch with fresh leaf data, so after batch 1 this skips Catalyst
+      case Some(l) => retag(df, l, role)
+      // template-cached execution: the pin's plan structure repeats every
+      // batch with fresh leaf data, so after batch 1 this skips Catalyst,
+      // and all-local plans run inline on the driver with no main-session
+      // optimizer pass (an `optimizedPlan` match here cost 0.3 to 0.8 s per
+      // big composed pin at sf0.1)
+      case None =>
+        import org.apache.spark.sql.GraftTemplates
         GraftTemplates.taggedLocal(df.sparkSession, df.schema,
           GraftTemplates.collect(df).toSeq, role).coalesce(1)
     }
-  }
 
   /** Delta resolver for one batch that swaps each table's delta for a
     * collected LocalRelation when it fits [[localBatchRows]] — memoized so
@@ -726,7 +703,7 @@ object Ivm {
           def childRefresh(): DataFrame =
             doRefresh(view, child, base, deltas, store, broadcastDeltas,
               needDelta, releaseDelta)
-          if (store.concurrentParts && parallelParts && subs.nonEmpty)
+          if (store.concurrentParts && subs.nonEmpty)
             // independent parts on parallel threads (see partsPool note)
             inPartsPool[Any](
               subs.zipWithIndex.map { case (s, i) => () => subRefresh(s, i) }

@@ -1,6 +1,7 @@
 package graft.ivm
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
 
 /** Core constants of the IVM engine.
   *
@@ -32,6 +33,17 @@ object IvmCore {
   /** Conventional name of the delta table for a base table
     * (ivm_rewrite_rule.hpp:107). */
   def deltaTableName(table: String): String = s"delta_$table"
+
+  /** The driver-resident relation of an already-local frame: a
+    * LocalRelation, bare or under a pin's coalesce(1). Matches the LOGICAL
+    * plan — running the optimizer just to detect this costs a full
+    * Catalyst pass per call. */
+  def localLeaf(df: DataFrame): Option[LocalRelation] =
+    df.queryExecution.logical match {
+      case l: LocalRelation                        => Some(l)
+      case Repartition(1, false, l: LocalRelation) => Some(l)
+      case _                                       => None
+    }
 }
 
 /** Restricted view-definition AST — exactly the operator surface the

@@ -176,8 +176,9 @@ private[ivm] object Trace {
   def dropTape(store: IvmStore, view: String): Unit =
     tapes.synchronized(Option(tapes.get(store)).foreach(_.remove(view)))
 
-  @volatile var replays: Long = 0L
-  @volatile var records: Long = 0L
+  // ScalarDeco parts replay concurrently on the parts pool
+  private val replayCount = new java.util.concurrent.atomic.AtomicLong()
+  def replays: Long = replayCount.get()
   def enabled: Boolean =
     !sys.props.get("graft.traceReplay").contains("false")
   /** Dev flag (-Dgraft.traceDebug=true): print why a walk did not record
@@ -273,7 +274,6 @@ private[ivm] object Trace {
           dropTape(store, view); return
       }
     }
-    records += 1
     putTape(store, view,
       Tape(sigStr, rec.steps.toSeq, rec.probes.toMap, keys.toMap, finalPlan))
   }
@@ -379,7 +379,7 @@ private[ivm] object Trace {
       val fin = swap(tape.finalPlan)
       if (aborted) None
       else {
-        replays += 1
+        replayCount.incrementAndGet()
         Some(GraftTemplates.ofPlan(spark, fin))
       }
     }

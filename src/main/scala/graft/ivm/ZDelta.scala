@@ -32,7 +32,7 @@ import scala.collection.mutable
   * degrades gracefully to shuffle joins chosen by AQE.
   */
 object ZDelta {
-  import IvmCore.{WEIGHT, MULT, HCOUNT}
+  import IvmCore.{WEIGHT, MULT, HCOUNT, localLeaf}
 
   /** One pending aggregate-state replacement discovered during delta
     * computation: `updated` holds the post-delta rows for every touched
@@ -221,7 +221,12 @@ object ZDelta {
           require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
             "graft.pinMode=reliable needs sparkContext.setCheckpointDir " +
               "(an HDFS/S3-compatible path) before refresh")
-          df.checkpoint(false)
+          // EAGER: a lazy reliable checkpoint completes inside whichever
+          // concurrent commit job first finishes over the pin, and Spark's
+          // RDDCheckpointData lock then inverts against the DAG
+          // scheduler's per-RDD lock for the sibling jobs reading the same
+          // pin (a JVM deadlock, seen in ModeEquivalenceSpec's reliable run)
+          df.checkpoint(true)
         } else df.localCheckpoint(false)
       pins.synchronized { pins += c }; c
     }
@@ -261,8 +266,6 @@ object ZDelta {
   // Trace recording stays sound: the recorder is synchronized and its
   // time-ordered tape is a valid topological order (a step can only
   // reference pins that already existed when it was composed).
-  private def parallelWalk: Boolean =
-    !sys.props.get("graft.parallelWalk").contains("false")
   // Unbounded-on-demand pool: forks nest (a join inside a join side), and
   // a bounded pool could deadlock with every worker awaiting a child fork.
   // Thread count is bounded in practice by the view's join depth.
@@ -735,18 +738,13 @@ object ZDelta {
   private def localRowsOf(d: DataFrame, ctx: Ctx): Option[
       (Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
        Seq[org.apache.spark.sql.catalyst.InternalRow])] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
-    def leaf(df: DataFrame) = df.queryExecution.logical match {
-      case l: LocalRelation                        => Some((l.output, l.data))
-      case Repartition(1, false, l: LocalRelation) => Some((l.output, l.data))
-      case _                                       => None
-    }
-    leaf(d).orElse {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    localLeaf(d).orElse {
       if (ctx.localCap <= 0) None
       else if (!d.queryExecution.analyzed.collectLeaves()
           .forall(_.isInstanceOf[LocalRelation])) None
-      else Ivm.collectLocal(d, ctx.localCap).flatMap(leaf)
-    }
+      else Ivm.collectLocal(d, ctx.localCap).flatMap(localLeaf)
+    }.map(l => (l.output, l.data))
   }
 
   /** `key IN (delta's distinct values)` conjunction for an equi-join's
@@ -845,19 +843,14 @@ object ZDelta {
     // and aggregate-changelog deltas stay inline: they are already local
     // collects or pinned ΔVs, and a pin-of-a-pin is pure overhead).
     def pinned(d: DataFrame, q: IvmQuery, tag: String): DataFrame =
-      if (!(lHas && rHas) || !q.isInstanceOf[Join]) d
-      else d.queryExecution.logical match {
-        case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false,
-            _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation) => d
-        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => d
-        case _ => ctx.pin(d, tag)
-      }
+      if (!(lHas && rHas) || !q.isInstanceOf[Join] || localLeaf(d).isDefined) d
+      else ctx.pin(d, tag)
     lazy val dl = pinned(delta(l, ctx, path + ".0"), l, s"$path.0.dj")
     lazy val dr = pinned(delta(r, ctx, path + ".1"), r, s"$path.1.dj")
     // Both sides carry deltas → their walks are independent compositions:
     // force them on two threads so each side's serial pin collects overlap
     // (see the walk-level parallel composition note above).
-    if (lHas && rHas && parallelWalk) forkJoin(dl, dr)
+    if (lHas && rHas) forkJoin(dl, dr)
     // CURRENT sides (base ⊎ applied deltas), weighted — a side delta'd in
     // an EARLIER batch must be visible to this batch's other-side delta.
     // Built per term through [[currentSide]]: a small local delta prunes
@@ -973,7 +966,7 @@ object ZDelta {
     lazy val dr0 = delta(r, ctx, path + ".1")
     lazy val dr = ctx.pin(dr0, path + ".dr")
     // independent side walks overlap (see walk-level parallel composition)
-    if (lHas && rHas && parallelWalk) forkJoin(dl, dr)
+    if (lHas && rHas) forkJoin(dl, dr)
     // CURRENT sides, weighted (see deltaJoin) — both the inner terms and
     // the preserved-side anti scans must see earlier batches' deltas.
     lazy val bl = currentW(l, ctx, path + ".0").withColumnRenamed(WEIGHT, CW)

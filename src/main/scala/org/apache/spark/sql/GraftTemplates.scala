@@ -96,9 +96,6 @@ object GraftTemplates {
   private val inlineFailLogged = TrieMap.empty[String, Unit]
   val inlineRuns = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def inlineEnabled: Boolean =
-    !sys.props.get("graft.driverExec").contains("false")
-
   private def allNarrowUncached(r: org.apache.spark.rdd.RDD[_]): Boolean =
     r.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE &&
       r.dependencies.forall {
@@ -110,7 +107,6 @@ object GraftTemplates {
     * None when the plan shape doesn't qualify or compute fails. */
   private def driverCollect(plan: SparkPlan,
       cap: Int): Option[Array[InternalRow]] = {
-    if (!inlineEnabled) return None
     // Only plans whose every leaf is a driver-resident LocalTableScan
     // qualify: file scans (even single-partition ones over a small state
     // segment) take executor-only paths — parquet reader block locks need
@@ -196,15 +192,14 @@ object GraftTemplates {
   private val seenOnce = TrieMap.empty[String, Unit]
   // one conf-pinned clone per session, for template compilation
   private val tplSessions = TrieMap.empty[SparkSession, classic.SparkSession]
-  @volatile var hits: Long = 0L
-  @volatile var misses: Long = 0L
+  // template runs that reused a compiled plan; several threads run
+  // templates at once (the walk, ivm-state commits, ScalarDeco parts)
+  private val hitCount = new AtomicLong()
+  def hits: Long = hitCount.get()
 
   // set true if the template session's rule exclusions prove ineffective
   // (see the self-check in sessionFor) — templates then disable entirely
   @volatile private var selfCheckFailed = false
-
-  private def enabled: Boolean =
-    !selfCheckFailed && !sys.props.get("graft.planTemplates").contains("false")
 
   /** Attribute-metadata key naming a local's refresh-loop ROLE (e.g.
     * "pin:r.0.touched", "state:v/r", "delta:orders") — the trace-replay
@@ -244,17 +239,7 @@ object GraftTemplates {
       spark.asInstanceOf[classic.SparkSession], plan)
     runCore(spark, plan,
       () => execPlan(df.queryExecution.executedPlan, -1),
-      p => execPlan(p, -1), () => df)
-  }
-
-  /** Re-tag an existing local-backed frame (dev/spike helper). */
-  def tag(df: DataFrame): DataFrame = {
-    val (schema, rows) = df.queryExecution.optimizedPlan match {
-      case l: LocalRelation => (DataTypeUtils.fromAttributes(l.output), l.data)
-      case _ => (df.schema,
-        df.queryExecution.executedPlan.executeCollect().toSeq)
-    }
-    taggedLocal(df.sparkSession, schema, rows).coalesce(1)
+      p => execPlan(p, -1))
   }
 
   private def pidOf(attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]): Option[Long] =
@@ -442,7 +427,8 @@ object GraftTemplates {
   }
 
   /** Execute `df` through the template cache; falls back to a plain
-    * executeCollect when disabled. Returns InternalRows (safe copies). */
+    * executeCollect when the self-check disabled templates. Returns
+    * InternalRows (safe copies). */
   def collect(df: DataFrame): Array[InternalRow] =
     run(df, p => execPlan(p, -1))
 
@@ -473,16 +459,17 @@ object GraftTemplates {
   private def run(df: DataFrame,
       exec: SparkPlan => Array[InternalRow]): Array[InternalRow] =
     runCore(df.sparkSession, df.queryExecution.analyzed,
-      () => exec(df.queryExecution.executedPlan), exec, () => df)
+      () => exec(df.queryExecution.executedPlan), exec)
 
   /** Core of [[run]] over an ALREADY-ANALYZED plan. `fallback` executes a
     * fresh plan outside the template machinery (built lazily: the hot path
     * never constructs a Dataset or re-runs the analyzer). */
   private def runCore(spark: SparkSession, analyzed: LogicalPlan,
       fallback: () => Array[InternalRow],
-      exec: SparkPlan => Array[InternalRow],
-      mkDf: () => DataFrame): Array[InternalRow] = {
-    if (!enabled) return fallback()
+      exec: SparkPlan => Array[InternalRow]): Array[InternalRow] = {
+    // resolved first: its self-check can disable templates on this call
+    val tplSession = sessionFor(spark)
+    if (selfCheckFailed) return fallback()
     // RDD-backed leaves (localCheckpoint pins on the distributed path) have
     // per-batch identities — a template could never be reused, and caching
     // one per batch would just grow the cache. Execute plainly.
@@ -492,12 +479,11 @@ object GraftTemplates {
     if (cache.size > 2048) clear() // runaway-key backstop; templates rebuild
     val params = paramsOf(analyzed)
     val key = cacheKey(analyzed)
-    val tplSession = sessionFor(spark)
     val tpl = cache.get(key) match {
       case Some(t) if t.plan == null => // untemplatable structure
         return fallback()
       case Some(t) if t.paramIds.length == params.length =>
-        hits += 1; t
+        hitCount.incrementAndGet(); t
       case _ =>
         // first sight of this structure: record it and execute plainly —
         // compile only when it recurs (maintenance loops recur per batch;
@@ -508,7 +494,6 @@ object GraftTemplates {
           .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
         if (seenOnce.putIfAbsent(keyDigest, ()).isEmpty)
           return fallback()
-        misses += 1
         val phys = tplSession.withActive {
           classic.Dataset.ofRows(tplSession, analyzed)
             .queryExecution.executedPlan
@@ -558,16 +543,6 @@ object GraftTemplates {
             { val pr = paramRows(pidOf(l.output).get)
               (l.rows eq pr) || l.rows == pr }
           }
-        if (sys.props.get("graft.planTemplates.verify").contains("true")) {
-          val raw = tplSession.withActive { phys.executeCollect() }
-          val ref0 = mkDf().queryExecution.executedPlan.executeCollect()
-          val a0 = raw.map(_.toString).sorted.toSeq
-          val b0 = ref0.map(_.toString).sorted.toSeq
-          if (a0 != b0)
-            println(s"=== BUILD-TIME MISMATCH (no substitution): tpl ${a0.length} " +
-              s"ref ${b0.length}; tpl-only ${a0.diff(b0).take(3)} " +
-              s"ref-only ${b0.diff(a0).take(3)} ===")
-        }
         val t = if (sound) Template(phys, params.map(_._1))
                 else Template(null, Nil)
         cache.put(key, t)
@@ -577,35 +552,9 @@ object GraftTemplates {
     // copies made during substitution capture the ACTIVE session at node
     // construction; without one (e.g. a store commit on a non-query thread)
     // the fresh nodes would carry session = null and NPE at execute
-    val fresh = tplSession.withActive { substituted(tpl, params) }
-    lastPlanDump = fresh.toString
-    val out = tplSession.withActive { exec(fresh) }
-    if (sys.props.get("graft.planTemplates.verify").contains("true")) {
-      val ref = mkDf().queryExecution.executedPlan.executeCollect()
-      val a = out.map(_.toString).sorted.toSeq
-      val b = ref.map(_.toString).sorted.toSeq
-      if (a != b) {
-        println(s"=== TEMPLATE MISMATCH (tpl ${a.length} rows, ref ${b.length}) ===")
-        println(s"--- tpl-only: ${a.diff(b).take(5)}")
-        println(s"--- ref-only: ${b.diff(a).take(5)}")
-        println(s"--- build paramIds: ${tpl.paramIds.mkString(",")}")
-        println(s"--- current params: ${params.map(p => s"${p._1}(${p._2.length}#${p._2.map(_.hashCode()).hashCode()})").mkString(",")}")
-        println(s"--- was hit: ${tpl.paramIds != params.map(_._1)}")
-        java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/tpl_raw.txt"),
-          tpl.plan.toString.getBytes)
-        java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/tpl_subst.txt"),
-          fresh.toString.getBytes)
-        println(s"--- substituted plan:\n$fresh")
-        println(s"--- reference plan:\n${mkDf().queryExecution.executedPlan}")
-        throw new IllegalStateException("graft template mismatch")
-      }
-    }
-    out
+    tplSession.withActive { exec(substituted(tpl, params)) }
   }
 
-  /** Last substituted physical plan (dev diagnostics only). */
-  @volatile var lastPlanDump: String = ""
-
   /** Drop every cached template (tests; or after a base-table swap). */
-  def clear(): Unit = { cache.clear(); seenOnce.clear(); hits = 0; misses = 0 }
+  def clear(): Unit = { cache.clear(); seenOnce.clear() }
 }

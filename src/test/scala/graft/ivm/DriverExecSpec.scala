@@ -7,21 +7,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
 /** De-risks the driver-inline execution path
-  * ([[org.apache.spark.sql.GraftTemplates]] `driverCollect`): the same
-  * multi-batch refresh suite runs twice — once with `graft.driverExec`
-  * default-on, once forced off — and every batch's view contents must be
-  * identical. The on-mode run must also prove the path ENGAGES
-  * (`inlineRuns` advances), otherwise the parity assertion is vacuous.
+  * ([[org.apache.spark.sql.GraftTemplates]] `driverCollect`) on a
+  * Q13-shaped view: after every batch of a multi-batch refresh the view
+  * must equal [[Ivm.recompute]] over the pre-batch tables, and the run
+  * must prove the path ENGAGES (`inlineRuns` advances), otherwise the
+  * equality says nothing about it.
   *
-  * SEQUENTIAL-EXECUTION ASSUMPTION: this test mutates the global
-  * `graft.driverExec` sys-prop and asserts on the shared
-  * `GraftTemplates.inlineRuns` counter — sound only because the build
-  * runs suites sequentially in one forked JVM (`Test / fork := true`,
-  * `testForkedParallel := false`, `parallelExecution := false` — all
-  * pinned in build.sbt with a pointer back here). A parallel runner
-  * would flip the execution path under concurrently running suites and
-  * make the counter deltas flaky; revisit the prop/counter handling
-  * before enabling one. */
+  * SEQUENTIAL-EXECUTION ASSUMPTION: the assertion reads the process-global
+  * `GraftTemplates.inlineRuns` counter as a before/after delta — sound
+  * only because the build runs suites sequentially in one forked JVM
+  * (build.sbt). */
 class DriverExecSpec extends AnyFunSuite with SparkTestBase {
 
   private val view: IvmQuery = Aggregate(
@@ -36,6 +31,8 @@ class DriverExecSpec extends AnyFunSuite with SparkTestBase {
   private def custDf: DataFrame =
     df("ck INT", (1 to 40).map(Row(_)))
 
+  private def ordDf(rows: Seq[Row]): DataFrame = df("ck INT, ok INT", rows)
+
   private val batches: Seq[Seq[(Boolean, Int, Int)]] = Seq(
     Seq((true, 1, 101), (true, 1, 102), (true, 2, 201)),
     Seq((true, 3, 301), (false, 1, 101)),
@@ -47,32 +44,32 @@ class DriverExecSpec extends AnyFunSuite with SparkTestBase {
     df(s"ck INT, ok INT, `${IvmCore.MULT}` BOOLEAN",
       b.map { case (p, c, o) => Row(c, o, p) })
 
-  private def runBatches(): Seq[Seq[Row]] = {
-    val store = new MemStore
-    val base: String => DataFrame = {
-      case "cust" => custDf
-      case "ord"  => df("ck INT, ok INT", Seq.empty)
-    }
-    Ivm.create("v", view, base, store, deltaTables = Set("ord"))
-    batches.map { b =>
-      Ivm.refreshState("v", view, base,
-        { case "ord" => Some(deltaDf(b)); case _ => None }, store)
-      Ivm.read("v", view, store).orderBy("c_count").collect().toSeq
-    }
+  private def tables(ord: DataFrame): String => DataFrame = {
+    case "cust" => custDf
+    case "ord"  => ord
   }
 
-  test("driverExec on/off produce identical view contents; on-mode engages") {
+  test("refresh == recompute after every batch; driver-inline runs fire") {
     val before = GraftTemplates.inlineRuns.get()
-    val withInline = runBatches()
+    val store = new MemStore
+    val base = tables(ordDf(Seq.empty))
+    Ivm.create("v", view, base, store, deltaTables = Set("ord"))
+    var ord = Vector.empty[Row]
+    for ((b, i) <- batches.zipWithIndex) {
+      val deltas: String => Option[DataFrame] = {
+        case "ord" => Some(deltaDf(b))
+        case _     => None
+      }
+      Ivm.refreshState("v", view, base, deltas, store)
+      withClue(s"batch ${i + 1}: ") {
+        assertSameRows(Ivm.read("v", view, store),
+          Ivm.recompute(view, tables(ordDf(ord)), deltas))
+      }
+      val (ins, del) = b.partition(_._1)
+      ord = ord.diff(del.map { case (_, c, o) => Row(c, o) }) ++
+        ins.map { case (_, c, o) => Row(c, o) }
+    }
     assert(GraftTemplates.inlineRuns.get() > before,
-      "driver-inline exec never engaged — parity check would be vacuous")
-    sys.props("graft.driverExec") = "false"
-    try {
-      val mid = GraftTemplates.inlineRuns.get()
-      val without = runBatches()
-      assert(GraftTemplates.inlineRuns.get() == mid,
-        "driver-inline exec ran despite graft.driverExec=false")
-      assert(withInline == without)
-    } finally sys.props.remove("graft.driverExec")
+      "driver-inline exec never engaged — the equality would be vacuous")
   }
 }

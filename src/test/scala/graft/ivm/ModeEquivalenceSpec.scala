@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[IvmPropertySpec]] shapes, maintained over several batches, must equal
   * [[Ivm.recompute]] after each batch with the engine defaults and with
   * each knob flipped on its own. The default run must also take every
-  * fast path the knobs switch off — trace replay, a plan-template hit, a
-  * driver-inline run and a touched-key prune — so its pass is not vacuous.
+  * fast path — trace replay, a plan-template hit, a driver-inline run and
+  * a touched-key prune — so its pass is not vacuous.
   */
 class ModeEquivalenceSpec extends AnyFunSuite with SparkTestBase {
   import IvmPropertySpec._
@@ -88,10 +88,7 @@ class ModeEquivalenceSpec extends AnyFunSuite with SparkTestBase {
   // `pinMode` only decides how the DISTRIBUTED path pins (small batches
   // collect to the driver in either mode), so its flip also forces that path.
   private val flips: Seq[Map[String, String]] = Seq(
-    Map("graft.parallelWalk" -> "false"),
     Map("graft.traceReplay" -> "false"),
-    Map("graft.planTemplates" -> "false"),
-    Map("graft.driverExec" -> "false"),
     Map("graft.localBatchRows" -> "0"),
     Map("graft.pinMode" -> "reliable", "graft.localBatchRows" -> "0"))
 

@@ -61,4 +61,33 @@ class TemplateSpec extends AnyFunSuite with SparkTestBase {
     assert(total(rowsOf(Seq(Seq(1, 1), Seq(2, 2), Seq(3, 3)))) == 6L)
     assert(total(rowsOf(Seq(Seq(7, 70), Seq(8, -70)))) == 0L)
   }
+
+  test("concurrent runs of one compiled template count every hit") {
+    val sch = StructType(Seq(StructField("k", IntegerType, nullable = true),
+      StructField("v", IntegerType, nullable = true)))
+    def total(v: Int): Long = {
+      val p = GraftTemplates.taggedLocal(spark, sch, rowsOf(Seq(Seq(1, v))))
+      GraftTemplates.collect(p.agg(sum(col("v")))).head.getLong(0)
+    }
+    // 1st sight records the structure, 2nd compiles it: later runs all hit
+    assert(total(1) == 1L && total(2) == 2L)
+    val (threads, runs) = (8, 50)
+    val hits0 = GraftTemplates.hits
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val fs = (0 until threads).map(t => pool.submit(
+        new java.util.concurrent.Callable[Seq[Long]] {
+          override def call(): Seq[Long] = {
+            start.await()
+            (0 until runs).map(i => total(t * runs + i))
+          }
+        }))
+      start.countDown()
+      fs.zipWithIndex.foreach { case (f, t) =>
+        assert(f.get() == (0 until runs).map(i => (t * runs + i).toLong))
+      }
+    } finally pool.shutdown()
+    assert(GraftTemplates.hits - hits0 == threads * runs)
+  }
 }
