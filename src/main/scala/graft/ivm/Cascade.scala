@@ -22,7 +22,10 @@ import scala.collection.mutable
   * cascade therefore freezes each consumed level's output INTO THE STORE
   * at create time (`<name>/_cascade_frozen` — versioned and immutable like
   * any state, durable on [[ParquetStore]]) and resolves upstream scans
-  * from the frozen snapshot forever after.
+  * from the frozen snapshot forever after. A small snapshot is written
+  * driver-direct like any small first write, so it is driver-resident:
+  * downstream delta terms that read it have only local leaves and run
+  * driver-inline through the template cache.
   *
   * The whole chain refreshes inside ONE store transaction: on a
   * transactional store every level's state flips publish in a single
@@ -97,14 +100,8 @@ final class Cascade(
             // param instead of a cached plan
             val (d, n) = Ivm.collectLocal(d0, 1 << 16) match {
               case Some(local) =>
-                val rows = local.queryExecution.logical match {
-                  case org.apache.spark.sql.catalyst.plans.logical
-                      .Repartition(1, false,
-                        l: org.apache.spark.sql.catalyst.plans.logical
-                          .LocalRelation) => l.data.length.toLong
-                  case _ => local.count()
-                }
-                (local, rows)
+                (local, IvmCore.localLeaf(local).map(_.data.length.toLong)
+                  .getOrElse(local.count()))
               case None =>
                 val c = d0.cache(); pinned += c
                 (c, c.count())

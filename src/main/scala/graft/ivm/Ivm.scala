@@ -867,8 +867,13 @@ object Ivm {
     val st = snap(topName) // schema only
     val cols = st.columns.filterNot(_ == HCOUNT).toSeq
     val adjCol = "__ivm_adj"
-    val dvAgg = dv.groupBy(cols.map(col): _*)
-      .agg(sum(WEIGHT).as(adjCol)).cache()
+    val agg = dv.groupBy(cols.map(col): _*).agg(sum(WEIGHT).as(adjCol))
+    // A driver-local ΔV aggregates into a driver-local frame: a template
+    // substitution point, where a cached frame would fail the template
+    // soundness gate and re-plan the merge every batch. Only the
+    // distributed ΔV caches (slice and keyHint both read dvAgg).
+    val local = localLeaf(dv).isDefined
+    val dvAgg = if (local) toLocal(agg) else agg.cache()
     try {
       val oldTouched = snap.slice(topName, dvAgg, cols)
       val updatedTop = ZDelta.leftOuterByKeys(dvAgg, oldTouched, cols,
@@ -877,7 +882,7 @@ object Ivm {
           (coalesce(col(HCOUNT), lit(0L)) + col(adjCol)).as(HCOUNT)): _*)
       store.merge(topName, updatedTop, cols, col(HCOUNT) > 0,
         keyHint = dvAgg)
-    } finally dvAgg.unpersist()
+    } finally if (!local) dvAgg.unpersist()
   }
 
   // ------------------------------------------------- multi-view sharing

@@ -321,7 +321,11 @@ final class ParquetStore(
     /** States smaller than this take the single-segment path: a merge is
       * ONE whole-rewrite query (no bucket bookkeeping), which beats
       * selective rewrite until the state outgrows a single task's
-      * comfortable write. Layout adapts per state as it grows/shrinks
+      * comfortable write. A state's FIRST write compares Catalyst's size
+      * estimate of the frame against it (there is no prior size yet): an
+      * estimated-small first write is driver-direct, so the state is
+      * driver-resident from create on. 0 makes every keyed state bucketed
+      * from its first write. Layout adapts per state as it grows/shrinks
       * across versions — size-tiered, like any LSM/lakehouse store. */
     smallStateBytes: Long = 64L << 20,
     /** Maximum segments per bucket chain before a merge compacts the
@@ -692,6 +696,26 @@ final class ParquetStore(
     * bounds the driver collect when one batch grows a state explosively. */
   private val localPutRows = 1 << 18
 
+  /** Catalyst's estimate of `df` fits the driver-direct write: size under
+    * [[smallStateBytes]] and, when the plan knows it, row count within
+    * [[localPutRows]] — the layout decision for a state's first write,
+    * which has no prior size. */
+  private def estimatedSmall(df: DataFrame): Boolean = {
+    val stats = df.queryExecution.optimizedPlan.stats
+    stats.sizeInBytes < smallStateBytes &&
+      stats.rowCount.forall(_ <= localPutRows)
+  }
+
+  /** The driver-direct write of a frame gated small; false when its
+    * result is over [[localPutRows]]. The caller's distributed write then
+    * computes the frame again: on a 300k-row aggregate first write (4-core
+    * host) that cost less than writing the collected rows out through a
+    * local frame. */
+  private def putDriverDirect(name: String, df: DataFrame,
+      keys: Seq[String]): Boolean =
+    org.apache.spark.sql.GraftTemplates.collectCapped(df, localPutRows)
+      .map(rows => putLocalRows(name, df.schema, rows.toSeq, keys)).isDefined
+
   private def putPlain(name: String, df: DataFrame, keys: Seq[String]): Unit = {
     // A state KNOWN small (prior version under the single-segment
     // threshold) takes the DRIVER-DIRECT write: execute the merge plan
@@ -702,21 +726,21 @@ final class ParquetStore(
     // slice of the small-batch refresh floor). The rows in hand then also
     // serve every subsequent read of this segment as a LocalRelation
     // (readMemo pre-population) — state slices in the NEXT batch plan with
-    // no scan job. First-time writes (unknown size) keep the distributed
-    // path and its parallelism.
-    val knownSmall = lookup(name).exists(e => e.bytes > 0 && e.bytes < smallStateBytes)
-    val local =
-      if (knownSmall || org.apache.spark.sql.GraftColumnOps.foldsToLocal(df))
-        org.apache.spark.sql.GraftTemplates.collectCapped(df, localPutRows)
-      else None
-    local match {
-      case Some(rows) =>
-        putLocalRows(name, df.schema, rows.toSeq, keys)
-      case None =>
-        val rel = segDir(name, nextSegVersion())
-        df.write.mode("overwrite").parquet(s"$root/$rel")
-        publish(name, Entry(Map(Whole -> List(rel)), keys, Seq.empty,
-          dirBytes(rel), df.schema.toDDL))
+    // no scan job. A first-time write (no prior size) goes driver-direct
+    // when Catalyst estimates the frame small; an over-cap result lands
+    // through the distributed write below.
+    val small = lookup(name) match {
+      case Some(e) => e.bytes > 0 && e.bytes < smallStateBytes
+      case None    => estimatedSmall(df)
+    }
+    val landed =
+      (small || org.apache.spark.sql.GraftColumnOps.foldsToLocal(df)) &&
+        putDriverDirect(name, df, keys)
+    if (!landed) {
+      val rel = segDir(name, nextSegVersion())
+      df.write.mode("overwrite").parquet(s"$root/$rel")
+      publish(name, Entry(Map(Whole -> List(rel)), keys, Seq.empty,
+        dirBytes(rel), df.schema.toDDL))
     }
   }
 
@@ -751,15 +775,9 @@ final class ParquetStore(
       (org.apache.spark.sql.types.StructType,
        Seq[org.apache.spark.sql.catalyst.InternalRow])] =
     if (e.layered || e.chains.size != 1 || !e.chains.contains(Whole)) None
-    else readMemo.get(e.allPaths.distinct.sorted).flatMap { df =>
-      df.queryExecution.logical match {
-        case org.apache.spark.sql.catalyst.plans.logical.Repartition(1, false,
-            l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation) =>
-          Some((org.apache.spark.sql.catalyst.types.DataTypeUtils
-            .fromAttributes(l.output), l.data))
-        case _ => None
-      }
-    }
+    else readMemo.get(e.allPaths.distinct.sorted).flatMap(IvmCore.localLeaf)
+      .map(l => (org.apache.spark.sql.catalyst.types.DataTypeUtils
+        .fromAttributes(l.output), l.data))
 
   /** Key types the driver-side merge can hash exactly like Spark's
     * null-safe join equality: atomic values whose `equals`/`hashCode` are
@@ -838,29 +856,38 @@ final class ParquetStore(
       case Some(e) if e.bytes < smallStateBytes =>
         // known-small state: single segment, merges take the 1-query path
         putPlain(name, df, bucketKeys)
-      case _ =>
-        // unknown (first create) or large: bucketed layout for selective
-        // merges and pruned slices. Every bucketed segment carries the
-        // tombstone + segment-seq columns (all-alive, constant seq) so
-        // overlay segments appended later union schema-identically and
-        // chain resolution has its ordering column in the data.
-        val v = nextSegVersion()
-        val rel = segDir(name, v)
-        df.withColumn(DEAD, lit(0)).withColumn(SEQ, lit(v))
-          .withColumn(B, bucketOf(bucketKeys))
-          .repartition(buckets, col(B)) // ONE file per bucket per segment —
-          // a chain read opens chainLen files per bucket, not chainLen ×
-          // writer partitions (32× fewer parquet footers on the overlay
-          // read path). The explicit count bounds the shuffle fanout to
-          // `buckets` tasks — bounded and predictable vs shuffle.partitions
-          .write.partitionBy(B).mode("overwrite").parquet(s"$root/$rel")
-        val found = discoverBuckets(rel)
-        // a zero-row state writes no bucket dirs; fall back to a plain
-        // empty segment so the schema stays readable
-        if (found.isEmpty) putPlain(name, df.limit(0), bucketKeys)
-        else publish(name, Entry(found.view.mapValues(List(_)).toMap,
-          bucketKeys, Seq.empty, dirBytes(rel), df.schema.toDDL))
+      case None if estimatedSmall(df) =>
+        // estimated-small first write: driver-direct single segment; a
+        // result over the row cap lands bucketed
+        if (!putDriverDirect(name, df, bucketKeys))
+          putBucketed(name, df, bucketKeys)
+      case _ => putBucketed(name, df, bucketKeys)
     }
+
+  /** Large, or a first write not estimated small: bucketed layout for
+    * selective merges and pruned slices. Every bucketed segment carries
+    * the tombstone + segment-seq columns (all-alive, constant seq) so
+    * overlay segments appended later union schema-identically and chain
+    * resolution has its ordering column in the data. */
+  private def putBucketed(name: String, df: DataFrame,
+      bucketKeys: Seq[String]): Unit = {
+    val v = nextSegVersion()
+    val rel = segDir(name, v)
+    df.withColumn(DEAD, lit(0)).withColumn(SEQ, lit(v))
+      .withColumn(B, bucketOf(bucketKeys))
+      .repartition(buckets, col(B)) // ONE file per bucket per segment —
+      // a chain read opens chainLen files per bucket, not chainLen ×
+      // writer partitions (32× fewer parquet footers on the overlay
+      // read path). The explicit count bounds the shuffle fanout to
+      // `buckets` tasks — bounded and predictable vs shuffle.partitions
+      .write.partitionBy(B).mode("overwrite").parquet(s"$root/$rel")
+    val found = discoverBuckets(rel)
+    // a zero-row state writes no bucket dirs; fall back to a plain
+    // empty segment so the schema stays readable
+    if (found.isEmpty) putPlain(name, df.limit(0), bucketKeys)
+    else publish(name, Entry(found.view.mapValues(List(_)).toMap,
+      bucketKeys, Seq.empty, dirBytes(rel), df.schema.toDDL))
+  }
 
   /** Bucket subdirectories actually written by a partitionBy job (empty
     * buckets produce no directory). */

@@ -30,9 +30,10 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructType}
   * rows into the cached plan's `LocalTableScanExec` leaves (matched by
   * param POSITION in the canonical traversal — identical structure implies
   * identical traversal) and calls `executeCollect`. Only analysis is paid
-  * per batch; optimization, planning and codegen are amortized across the
-  * view's lifetime. Parquet leaves stay in the template by path — base
-  * snapshots are immutable under the maintenance contract, and their
+  * per batch; optimization and planning are amortized across the
+  * view's lifetime. Parquet leaves stay in the template by path and file
+  * listing — base snapshots are immutable under the maintenance contract
+  * (a directory that gained files keys a new template), and their
   * broadcast futures are deliberately REUSED across batches (same bytes,
   * one build). Any state whose layout changes (small → bucketed) changes
   * the leaf set, hence the key, hence falls back to a fresh build.
@@ -50,6 +51,16 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructType}
   * its DATA is digested into the key instead — equal key ⇒ equal rows ⇒
   * reusing the build-time rows is sound.
   *
+  * Codegen policy: templates compile and run without generated code
+  * (`spark.sql.codegen.factoryMode` = NO_CODEGEN: no whole-stage stages,
+  * interpreted expression factories). Compiled classes live in Spark's
+  * codegen cache, an LRU of 100 entries by default (`spark.sql.codegen.
+  * cache.maxEntries`, a static conf only the application can set). A
+  * refresh needing more distinct classes than that (the 4-band LSH pairs
+  * cascade) missed the LRU and recompiled ~150 classes every batch. An
+  * interpreted template measured no slower than a compiled one on every
+  * shape tried on a 4-core host, scans of sf0.1 base tables included.
+  *
   * 100 TB note: templates only serve the small-batch local path (the
   * caller gates on `graft.localBatchRows`); large batches take fresh
   * plans where planning cost is noise against data cost. The win scales
@@ -65,8 +76,8 @@ object GraftTemplates {
   //
   // A substituted template plan on the small-batch path is typically ONE
   // partition whose lineage is all-narrow: LocalTableScans (delta collects,
-  // pins, driver-resident states) under codegen'd project/filter/agg/join
-  // stages, no exchanges (the template session plans local⋈local as
+  // pins, driver-resident states) under project/filter/agg/join operators,
+  // no exchanges (the template session plans local⋈local as
   // single-partition SHJ and aggregates with shuffle.partitions=1 — and a
   // SinglePartition child satisfies the agg's distribution outright, so
   // EnsureRequirements inserts nothing). Running such a plan as a Spark job
@@ -103,22 +114,10 @@ object GraftTemplates {
         case d => allNarrowUncached(d.rdd)
       }
 
-  /** Driver-inline collect of `plan` (up to `cap`+1 rows when `cap` >= 0);
-    * None when the plan shape doesn't qualify or compute fails. */
-  private def driverCollect(plan: SparkPlan,
+  /** Driver-inline collect of the built `rdd` (up to `cap`+1 rows when
+    * `cap` >= 0); None when its shape doesn't qualify or compute fails. */
+  private def driverCollect(rdd: org.apache.spark.rdd.RDD[InternalRow],
       cap: Int): Option[Array[InternalRow]] = {
-    // Only plans whose every leaf is a driver-resident LocalTableScan
-    // qualify: file scans (even single-partition ones over a small state
-    // segment) take executor-only paths — parquet reader block locks need
-    // a task registered with the BlockInfoManager, and failing there spams
-    // FAILED_READ_FILE errors before the fallback. An AQE root is not a
-    // LocalTableScanExec leaf and is rejected the same way.
-    val leavesLocal = plan.collectLeaves().forall(
-      _.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
-    if (!leavesLocal) return None
-    val rdd =
-      try plan.execute() // may schedule subquery/broadcast jobs via prepare()
-      catch { case scala.util.control.NonFatal(_) => return None }
     val parts = rdd.partitions
     if (parts.length != 1 || !allNarrowUncached(rdd)) return None
     val env = org.apache.spark.SparkEnv.get
@@ -126,10 +125,15 @@ object GraftTemplates {
     val tid = nextInlineTid.getAndDecrement()
     val tmm = new org.apache.spark.memory.TaskMemoryManager(
       env.memoryManager, tid)
+    // the submitting thread's local properties, as a job's task would get
+    // them: task-side conf reads (the codegen factory mode) see the
+    // session confs propagated for this execution
+    val props = Option(rdd.sparkContext.getLocalProperties)
+      .getOrElse(new java.util.Properties)
     val tc = new org.apache.spark.TaskContextImpl(
       stageId = 0, stageAttemptNumber = 0, partitionId = 0,
       taskAttemptId = tid, attemptNumber = 0, numPartitions = 1,
-      taskMemoryManager = tmm, localProperties = new java.util.Properties,
+      taskMemoryManager = tmm, localProperties = props,
       metricsSystem = env.metricsSystem,
       taskMetrics = org.apache.spark.executor.TaskMetrics.empty,
       cpus = 1, resources = Map.empty)
@@ -178,9 +182,38 @@ object GraftTemplates {
   /** Execute a physical plan: driver-inline when it qualifies, else as a
     * normal job action. `cap` < 0 collects fully; otherwise returns at most
     * `cap`+1 rows (executeTake semantics for the capped probe). */
-  private def execPlan(plan: SparkPlan, cap: Int): Array[InternalRow] =
-    driverCollect(plan, cap).getOrElse(
-      if (cap < 0) plan.executeCollect() else plan.executeTake(cap + 1))
+  private def execPlan(plan: SparkPlan, cap: Int): Array[InternalRow] = {
+    def plain() =
+      if (cap < 0) plan.executeCollect() else plan.executeTake(cap + 1)
+    // Only plans whose every leaf is a driver-resident LocalTableScan
+    // qualify: file scans (even single-partition ones over a small state
+    // segment) take executor-only paths — parquet reader block locks need
+    // a task registered with the BlockInfoManager, and failing there spams
+    // FAILED_READ_FILE errors before the fallback. An AQE root is not a
+    // LocalTableScanExec leaf and is rejected the same way.
+    if (!plan.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]))
+      return plain()
+    val rdd =
+      try plan.execute() // may schedule subquery/broadcast jobs via prepare()
+      catch { case scala.util.control.NonFatal(_) => return plain() }
+    // a rejected shape runs its job on the RDD already built: executing
+    // the plan again would regenerate every codegen stage's source
+    driverCollect(rdd, cap).getOrElse(plan match {
+      case _: LocalTableScanExec => plain() // a bare local scan needs no job
+      case _                     => collectRdd(rdd, cap)
+    })
+  }
+
+  /** The job-path collect of a built plan RDD: every row, or the first
+    * `cap`+1 in partition order (executeTake's result, in one job). */
+  private def collectRdd(rdd: org.apache.spark.rdd.RDD[InternalRow],
+      cap: Int): Array[InternalRow] = {
+    val n = if (cap < 0) -1 else cap + 1
+    val parts = rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) =>
+      (if (n < 0) it else it.take(n)).map(_.copy()).toArray)
+    val all = parts.iterator.flatMap(_.iterator)
+    (if (n < 0) all else all.take(n)).toArray
+  }
 
   private val nextId = new AtomicLong()
   private final case class Template(plan: SparkPlan, paramIds: Seq[Long])
@@ -259,7 +292,13 @@ object GraftTemplates {
     }
     val leaves = analyzed.collectLeaves().map {
       case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => "fs:" + fs.location.rootPaths.mkString(",")
+        // the listing is part of the structure: a compiled scan reads the
+        // files listed when it was built, so a dir that gained or lost
+        // files must not reuse it
+        case fs: HadoopFsRelation =>
+          val files = fs.location.inputFiles.sorted.toSeq
+          "fs:" + fs.location.rootPaths.mkString(",") + ":" + files.length +
+            ":" + files.hashCode
         case o                    => "rel:" + o.toString
       }
       case l: LocalRelation if pidOf(l.output).isEmpty =>
@@ -323,6 +362,11 @@ object GraftTemplates {
         LocalShuffledJoin +: s.experimental.extraStrategies
       s.conf.set("spark.sql.adaptive.enabled", "false")
       s.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
+      // no generated code (header). The one internal conf does both halves:
+      // CollapseCodegenStages inserts no whole-stage stages under
+      // NO_CODEGEN, and expression factories interpret. TemplateSpec and
+      // CascadeSpec's compile count guard it across Spark upgrades.
+      s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
       // PruneFilters/OptimizeLimitZero are NOT data-dependent, but they
       // replace a statically-false filter (or limit 0) over a param with an
       // EMPTY LocalRelation whose attrs still carry the pid -- substitution
@@ -551,9 +595,18 @@ object GraftTemplates {
     }
     // copies made during substitution capture the ACTIVE session at node
     // construction; without one (e.g. a store commit on a non-query thread)
-    // the fresh nodes would carry session = null and NPE at execute
-    tplSession.withActive { exec(substituted(tpl, params)) }
+    // the fresh nodes would carry session = null and NPE at execute.
+    // The codegen factory mode is read task-side: propagate the session's
+    // confs to this execution's jobs and driver-inline task.
+    tplSession.withActive {
+      org.apache.spark.sql.execution.SQLExecution
+        .withSQLConfPropagated(tplSession)(exec(substituted(tpl, params)))
+    }
   }
+
+  /** The compiled template for `df`'s structure, if one is cached (tests). */
+  def templateOf(df: DataFrame): Option[SparkPlan] =
+    cache.get(cacheKey(df.queryExecution.analyzed)).flatMap(t => Option(t.plan))
 
   /** Drop every cached template (tests; or after a base-table swap). */
   def clear(): Unit = { cache.clear(); seenOnce.clear() }

@@ -201,4 +201,101 @@ class CascadeSpec extends AnyFunSuite with SparkTestBase {
         Seq(CountStar("n"))), "up" -> up), baseFor(null), new MemStore)
     }
   }
+
+  // ---- training-data dedup: MinHash signatures → 4-band LSH pairs ----
+
+  private lazy val sigQ: IvmQuery = Project(
+    Project(
+      Filter(Scan("documents"), size(split(col("text"), " ")) >= 3),
+      Seq(col("doc_id").cast("long").as("did"),
+        graft.functions.MinhashSig.of(spark, col("text")).as("mhs"))),
+    col("did") +: (0 until 8).map(i => element_at(col("mhs"), i + 1).as(s"mh$i")))
+
+  private val pairsQ: IvmQuery = {
+    def side(id: String, b: Int) = Project(Scan("sig"), Seq(col("did").as(id),
+      col(s"mh${2 * b}").as("bk1"), col(s"mh${2 * b + 1}").as("bk2")))
+    def band(b: Int): IvmQuery = Project(
+      Filter(Join(side("a_id", b), side("b_id", b), Seq("bk1", "bk2")),
+        col("a_id") < col("b_id")),
+      Seq(col("a_id"), col("b_id")))
+    IvmQuery.distinct((1 until 4).map(band).foldLeft(band(0))(Union(_, _)),
+      Seq("a_id", "b_id"))
+  }
+
+  /** Document `id`: 12 tokens; a near-duplicate of `src` copies its tokens
+    * with the token at position id % 12 changed. */
+  private def doc(id: Int, src: Int): Row = {
+    val toks = (0 until 12).map(j =>
+      if (src != id && j == id % 12) s"x$id" else s"w${(src * 31 + j * 7) % 500}")
+    Row(id, toks.mkString(" "))
+  }
+
+  private val docSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id INT, text STRING")
+
+  private def localDf(rows: Seq[Row], schema: org.apache.spark.sql.types.StructType) = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** 60 base documents (every fifth a near-duplicate of the one before),
+    * written as parquet so the store sizes the cascade's states by
+    * Catalyst's estimate, as for any file-backed base table. */
+  private def dedupCascade(): (Cascade, ParquetStore, Seq[Row]) = {
+    val base = (1 to 60).map(i => if (i % 5 == 0) doc(i, i - 1) else doc(i, i))
+    val dir = Files.createTempDirectory("cascade-docs").toString
+    localDf(base, docSchema).write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val store = new ParquetStore(spark,
+      Files.createTempDirectory("cascade-dedup").toString)
+    val c = new Cascade(Seq("sig" -> sigQ, "pairs" -> pairsQ),
+      { case "documents" => docs }, store)
+    c.create()
+    (c, store, base)
+  }
+
+  /** Batch `i`: five near-duplicates of base documents in, batch i-1's
+    * five out. */
+  private def dedupBatch(i: Int): Seq[Row] = {
+    def ins(b: Int) = (1 to 5).map(j => doc(100 + 5 * b + j, (7 * b + 11 * j) % 60 + 1))
+    (ins(i).map(r => Row(r.getInt(0), r.getString(1), true)) ++
+      (if (i == 0) Nil else ins(i - 1).map(r => Row(r.getInt(0), r.getString(1), false))))
+  }
+
+  private val deltaSchema = docSchema.add(IvmCore.MULT, "boolean")
+
+  test("LSH dedup cascade on a default ParquetStore: driver-resident snapshot, refresh == recompute, replays fire") {
+    val (c, store, base) = dedupCascade()
+    assert(IvmCore.localLeaf(store("sig/_cascade_frozen")).isDefined,
+      "the frozen sig snapshot is not driver-resident after create")
+    var applied = base
+    val replays0 = Ivm.traceReplays
+    (0 until 5).foreach { i =>
+      val b = dedupBatch(i)
+      c.refresh { case "documents" => Some(localDf(b, deltaSchema)); case _ => None }
+      val gone = b.filterNot(_.getBoolean(2)).map(_.getInt(0)).toSet
+      applied = applied.filterNot(r => gone(r.getInt(0))) ++
+        b.filter(_.getBoolean(2)).map(r => Row(r.getInt(0), r.getString(1)))
+      val docs = localDf(applied, docSchema)
+      val sig = Eval.eval(sigQ, { case "documents" => docs })
+      assertSameRows(c.read("sig"), sig)
+      assertSameRows(c.read("pairs"), Eval.eval(pairsQ, { case "sig" => sig }))
+    }
+    assert(c.read("pairs").count() > 0, "no candidate pairs: the test data is degenerate")
+    assert(Ivm.traceReplays > replays0, "no trace replay fired")
+  }
+
+  test("steady LSH dedup cascade refreshes compile no generated code") {
+    val (c, _, _) = dedupCascade()
+    def refresh(i: Int): Unit = c.refresh {
+      case "documents" => Some(localDf(dedupBatch(i), deltaSchema)); case _ => None
+    }
+    (0 until 4).foreach(refresh) // warm-up: templates compile, tapes record
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    (4 until 7).foreach(refresh)
+    val n = compiles.getCount - before
+    assert(n == 0, s"$n classes compiled in 3 steady refreshes")
+  }
 }

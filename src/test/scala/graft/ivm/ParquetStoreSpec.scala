@@ -459,4 +459,114 @@ class ParquetStoreSpec extends AnyFunSuite with SparkTestBase {
     // time travel inside the retention window still serves the dropped view
     assert(Ivm.read("dropme", q, store.asOf(vBefore)).count() == 2)
   }
+
+  /** A file-source frame: Catalyst sizes it by its bytes on disk (a
+    * parallelized frame has no size estimate; a local one folds). */
+  private def pqFrame(schemaDDL: String, rows: Seq[Row]): DataFrame = {
+    val dir = Files.createTempDirectory("ivm-pq-src").toString
+    df(schemaDDL, rows).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def hasBucketDirs(root: String, name: String): Boolean =
+    Files.walk(Paths.get(s"$root/$name"))
+      .anyMatch(_.getFileName.toString.startsWith("__ivm_bucket="))
+
+  test("a small first write is driver-resident; the next merge stays on the driver") {
+    val (root, f) = mkStore() // default smallStateBytes
+    val store = f(root)
+    val rows = (0 until 64).map(i => Row(s"k$i", i.toLong))
+    store.putKeyed("st", pqFrame("g STRING, __ivm_count BIGINT", rows), Seq("g"))
+    store.put("p", pqFrame("x INT", Seq(Row(1), Row(2))))
+    assert(IvmCore.localLeaf(store("st")).isDefined,
+      "estimated-small first putKeyed is not driver-resident")
+    assert(IvmCore.localLeaf(store("p")).isDefined,
+      "estimated-small first put is not driver-resident")
+    assert(!hasBucketDirs(root, "st"))
+    store.merge("st", df("g STRING, __ivm_count BIGINT",
+      Seq(Row("k3", 99L), Row("k1", 0L))), Seq("g"), col("__ivm_count") > 0)
+    assert(!hasBucketDirs(root, "st"), "merge wrote bucket dirs")
+    assert(IvmCore.localLeaf(store("st")).isDefined)
+    // every segment is one driver-written file, never a Spark write job's
+    segDirs(root, "st").foreach { seg =>
+      assert(new java.io.File(s"$root/st/$seg").list().toSeq
+        .filterNot(_.startsWith(".")) == Seq("part-00000-graft.parquet"),
+        s"segment $seg")
+    }
+    val got = store("st").collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(got("k3") == 99L && !got.contains("k1") && got.size == 63)
+    // the driver-resident rows are the written segment's rows
+    val reopened = f(root)
+    assertSameRows(reopened("st"), store("st"))
+    assertSameRows(reopened("p"), store("p"))
+  }
+
+  test("with smallStateBytes = 0 a first write stays bucketed") {
+    val (root, f) = mkStore(smallBytes = 0)
+    val store = f(root)
+    val rows = (0 until 64).map(i => Row(s"k$i", i.toLong))
+    store.putKeyed("st", pqFrame("g STRING, c BIGINT", rows), Seq("g"))
+    store.put("p", pqFrame("x INT", Seq(Row(1), Row(2))))
+    assert(hasBucketDirs(root, "st"), "first putKeyed not bucketed")
+    assert(IvmCore.localLeaf(store("st")).isEmpty)
+    assert(IvmCore.localLeaf(store("p")).isEmpty)
+    assert(store("st").count() == 64)
+  }
+
+  test("a first write over the driver row cap lands distributed and bucketed") {
+    val (root, f) = mkStore()
+    val store = f(root)
+    val n = 300000L // over the 2^18-row cap of the driver-direct write
+    val plain = spark.range(n).toDF("v")
+    val keyed = plain.select((col("v") % 977).as("g"), col("v"))
+    // a known row count over the cap skips the driver collect outright
+    val counted = spark.range(n).toDF()
+    assert(counted.queryExecution.optimizedPlan.stats.rowCount.contains(n))
+    // a parquet frame is sized by its bytes and has no row count, so it is
+    // estimated small: the driver collect runs past the cap, and the
+    // distributed write computes the frame again
+    val src = Files.createTempDirectory("ivm-pq-big").toString
+    plain.write.mode("overwrite").parquet(src)
+    val pqKeyed = spark.read.parquet(src).select((col("v") % 977).as("g"), col("v"))
+    val pqPlain = spark.read.parquet(src)
+    Seq(keyed, plain, counted, pqKeyed, pqPlain).foreach { d =>
+      assert(d.queryExecution.optimizedPlan.stats.sizeInBytes < (64L << 20),
+        "frame is not estimated small by size")
+    }
+    assert(pqPlain.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
+    store.putKeyed("k", keyed, Seq("g"))
+    store.put("p", plain)
+    store.put("c", counted)
+    store.putKeyed("qk", pqKeyed, Seq("g"))
+    store.put("qp", pqPlain)
+    assert(hasBucketDirs(root, "k") && hasBucketDirs(root, "qk"),
+      "an over-cap keyed first write is not bucketed")
+    Seq("k" -> keyed, "p" -> plain, "c" -> counted, "qk" -> keyed,
+        "qp" -> plain).foreach {
+      case (nm, want) =>
+        assert(IvmCore.localLeaf(store(nm)).isEmpty, s"$nm is driver-resident")
+        val got = store(nm)
+        assert(got.count() == n)
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"$nm does not read back exactly")
+    }
+  }
+
+  test("small writes over a base dir whose files change read the current files") {
+    val (root, f) = mkStore()
+    val store = f(root)
+    val dir = Files.createTempDirectory("ivm-pq-grow").toString
+    // driver-direct writes run through the plan-template cache: a plan
+    // compiled over one listing of `dir` must not serve a later listing
+    (1 to 4).foreach { i =>
+      df("x INT", Seq(Row(i))).write.mode("append").parquet(dir)
+      val frame = spark.read.parquet(dir).groupBy().agg(sum(col("x")).as("s"))
+      store.put(s"s$i", frame) // a first write
+      store.put("same", frame) // a rewrite of a known-small state
+      Seq(s"s$i", "same").foreach { nm =>
+        assert(store(nm).collect().head.getLong(0) == (1 to i).sum,
+          s"write $i of $nm read a stale file listing")
+      }
+    }
+  }
 }

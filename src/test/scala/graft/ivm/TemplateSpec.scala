@@ -3,6 +3,7 @@ package graft.ivm
 import org.apache.spark.sql.{GraftTemplates, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -89,5 +90,42 @@ class TemplateSpec extends AnyFunSuite with SparkTestBase {
       }
     } finally pool.shutdown()
     assert(GraftTemplates.hits - hits0 == threads * runs)
+  }
+
+  test("templates compile without codegen, over local and parquet leaves") {
+    val sch = StructType(Seq(StructField("k", IntegerType, nullable = true),
+      StructField("v", IntegerType, nullable = true)))
+    val dir = java.nio.file.Files.createTempDirectory("tpl-pq").toString
+    spark.range(0, 50).select((col("id") % 5).cast("int").as("k"),
+      col("id").cast("int").as("w")).write.mode("overwrite").parquet(dir)
+    val dim = spark.read.parquet(dir)
+    def local(v: Int) = GraftTemplates.taggedLocal(spark, sch,
+      rowsOf(Seq(Seq(1, v), Seq(2, v + 1), Seq(1, v + 2))))
+    def allLocal(v: Int) = local(v)
+      .join(local(10 * v).select(col("k"), col("v").as("v2")), "k")
+      .groupBy(col("k")).agg(sum(col("v")).as("s"), sum(col("v2")).as("s2"))
+    def withFile(v: Int) = local(v).join(dim, "k")
+      .groupBy(col("k")).agg(sum(col("w")).as("s"))
+    // 1st sight records, 2nd compiles, 3rd substitutes: results per batch
+    Seq(1, 2, 3).foreach { v =>
+      val got = GraftTemplates.collect(allLocal(v))
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+      assert(got == Seq((1, 4L * v + 4, 40L * v + 4), (2, v + 1L, 10L * v + 1)))
+      val gotF = GraftTemplates.collect(withFile(v))
+        .map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
+      assert(gotF == Seq((1, 470L), (2, 245L)))
+    }
+    val lt = GraftTemplates.templateOf(allLocal(4))
+    assert(lt.isDefined, "no template compiled for the all-local plan")
+    assert(lt.get.collect { case w: WholeStageCodegenExec => w }.isEmpty,
+      s"all-local template has whole-stage codegen:\n${lt.get}")
+    // the local ⋈ local strategy survives the session clone
+    assert(lt.get.collect {
+      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
+    }.nonEmpty, lt.get.toString)
+    val ft = GraftTemplates.templateOf(withFile(4))
+    assert(ft.isDefined, "no template compiled for the parquet-leaf plan")
+    assert(ft.get.collect { case w: WholeStageCodegenExec => w }.isEmpty,
+      s"parquet-leaf template has whole-stage codegen:\n${ft.get}")
   }
 }
